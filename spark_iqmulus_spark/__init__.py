@@ -28,6 +28,14 @@ clearly-marked Pandas-UDF operators.
 
 __version__ = "0.1.0"
 
+from . import compat as _compat
+
+# Every Spark Python worker imports this package (cloudpickle resolves the
+# DataSources, readers and operator UDFs by reference), so this is where the
+# workers' per-round-trip zip re-parse is removed; the driver is untouched.
+if _compat.in_spark_worker():
+    _compat.memoize_zip_directories()
+
 
 def __getattr__(name):
     """Lazy top-level API: the names a reference user needs day one.

@@ -41,10 +41,12 @@ def get_spark(app_name: str = "spark_iqmulus_spark", cpus: int | None = None) ->
     """
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    # vendored-protobuf PYTHONPATH must be exported before the JVM launches
-    # so Python workers inherit it (transformWithStateInPandas protocol)
-    from .compat import ensure_protobuf
+    # PYTHONPATH must be exported before the JVM launches so Python workers
+    # inherit it: the package itself (workers unpickle our DataSources by
+    # reference) and the vendored protobuf (transformWithStateInPandas)
+    from .compat import ensure_package_on_workers, ensure_protobuf
 
+    ensure_package_on_workers()
     ensure_protobuf()
     return (
         SparkSession.builder.master(f"local[{cpus}]")
