@@ -36,9 +36,11 @@ to the general sink:
   minor 2, point format < 6 re-derivable from the schema, standard stride
   (a nonstandard ``pdr_length`` means undescribed trailing bytes the two
   paths treat differently);
-- output naming replicates the sink's fid-restore convention exactly
-  (source basenames, ``-fidN`` on collisions, all-filtered sources emit
-  nothing), driven by the SAME ``fid`` paths metadata the writer uses.
+- output naming is the sink's fid-restore convention exactly — both call
+  ``pointcloud_common.restore_names`` (source basenames, ``-fidN`` on
+  collisions) on the SAME ``fid`` paths metadata, and all-filtered sources
+  emit nothing.  Uniformity and the truncation guard are the transcoder's
+  own layout rules (``transcode._Las``/``_Ply``/``_Pcd``).
 
 The rewrite is installed by ``register_sources`` via
 ``install_fused_write()`` — the same opt-in surface that registers the
@@ -56,6 +58,7 @@ exactly what a strategy would see.
 
 from __future__ import annotations
 
+import functools
 import os
 
 #: ops the transcoder understands, keyed by Catalyst expression class.
@@ -307,6 +310,57 @@ def _extract_scan_filter(df):
     return source, where, projected, computed
 
 
+def _fid_paths(schema):
+    """Source paths from the ``fid`` column's metadata — the same input the
+    writer's fid-restore naming uses — or None."""
+    if "fid" not in schema.names:
+        return None
+    return list((schema["fid"].metadata or {}).get("paths") or []) or None
+
+
+def _source_headers(layout, paths):
+    """Parse the sources through the transcoder's own layout and apply its
+    uniformity rule: ``(headers, endian, fields)``, or None (the decline)
+    when a header does not parse, the sources are not uniform (the general
+    sink re-encodes heterogeneous inputs), or a data section is shorter
+    than its header claims.  That truncation stat-guard mirrors
+    plans/fused_read.py: the byte path would RAISE mid-transcode while the
+    general sink (allow_short scan) writes the partial records."""
+    from .pointcloud_common import headers_with_sizes
+
+    try:
+        parsed = headers_with_sizes(layout.parse, paths)
+    except Exception:
+        return None
+    headers = [h for h, _ in parsed]
+    try:
+        endian, fields = layout.check_uniform(paths, headers)
+    except ValueError as exc:
+        return _no(f"sources are not byte-uniform: {exc}")
+    for h, size in parsed:
+        offset, count, stride = layout.section(h)
+        if size < offset + count * stride:
+            return _no(
+                f"{h.location or 'source'}: data section shorter than the"
+                " header claims (general sink writes partial records)"
+            )
+    return headers, endian, fields
+
+
+def _runner(transcode, ext, overwrite, paths, **kwargs):
+    """The ready-to-run closure a planner returns: the sink's commit
+    hygiene, then the tiled transcoder over the fid paths."""
+
+    def _run(spark, out_dir):
+        from .pointcloud_common import clear_existing_outputs
+
+        os.makedirs(out_dir, exist_ok=True)
+        clear_existing_outputs(out_dir, ext, overwrite)
+        transcode(spark, paths, out_dir, **kwargs)
+
+    return _run
+
+
 def _las_fused_plan(
     df, where, path, overwrite, projected=None, computed=None,
     out_grid=None, ansi=True, manifest=True,
@@ -332,8 +386,8 @@ def _las_fused_plan(
     cast-overflow semantics the general sink's Project would apply."""
     import numpy as np
 
-    from .las_format import POINT_FORMATS, LasHeader, format_from_schema
-    from .pointcloud_common import headers_with_sizes
+    from .las_format import POINT_FORMATS, format_from_schema
+    from .transcode import _Las, transcode_las_tiled
 
     computed = computed or {}
     # computed x/y/z must be int32-rooted (the re-grid/transform shape —
@@ -350,10 +404,7 @@ def _las_fused_plan(
         (0.01, 0.01, 0.01), (0.0, 0.0, 0.0)
     )
     schema = df.schema
-    if "fid" not in schema.names:
-        return None
-    meta = schema["fid"].metadata or {}
-    paths = list(meta.get("paths") or [])
+    paths = _fid_paths(schema)
     if not paths:
         return None
     known = {n for flds in POINT_FORMATS.values() for n, _ in flds}
@@ -373,38 +424,11 @@ def _las_fused_plan(
                 f"projected columns {bad} are not standard LAS point"
                 " fields (general sink would write ExtraBytes)"
             )
-    try:
-        parsed = headers_with_sizes(LasHeader.parse_file, paths)
-    except Exception:
+    got = _source_headers(_Las(), paths)
+    if got is None:
         return None
-    for h, size in parsed:
-        # truncation stat-guard (mirrors plans/fused_read.py): a body
-        # shorter than the header claims makes the byte path RAISE
-        # mid-transcode while the general sink (allow_short scan) writes
-        # the partial records — not equivalent, fall back
-        if size < h.offset_to_points + h.pdr_nb * h.stride:
-            return _no(
-                f"{h.location or 'source'}: data section shorter than the"
-                " header claims (general sink writes partial records)"
-            )
-    headers = [h for h, _ in parsed]
+    headers = got[0]
     h0 = headers[0]
-    sig0 = (
-        h0.pdr_format,
-        h0.stride,
-        h0.scale,
-        h0.offset,
-        tuple((e.name, e.np_char) for e in h0.extra_fields),
-    )
-    for h in headers[1:]:
-        if (
-            h.pdr_format,
-            h.stride,
-            h.scale,
-            h.offset,
-            tuple((e.name, e.np_char) for e in h.extra_fields),
-        ) != sig0:
-            return None  # heterogeneous layout → general sink re-encodes
     # the general sink stamps its OPTION grid (default 0.01 / 0) while
     # passing raw ints through: a non-computed axis byte-copies, so its
     # source grid must already equal the option grid; a computed axis
@@ -528,21 +552,12 @@ def _las_fused_plan(
         return _no("computed columns mix ANSI and LEGACY cast modes")
     ansi_eff = modes.pop() if modes else bool(ansi)
     compute = {k: (p, oc) for k, (p, oc, _) in computed.items()} or None
-    grid = (tuple(out_scale), tuple(out_offset))
-
-    def _run(spark, out_dir):
-        from .pointcloud_common import clear_existing_outputs
-        from .transcode import transcode_las_tiled
-
-        os.makedirs(out_dir, exist_ok=True)
-        clear_existing_outputs(out_dir, ".las", overwrite)
-        transcode_las_tiled(
-            spark, paths, out_dir, where=where or None, project=project,
-            compute=compute, out_grid=grid, ansi=ansi_eff,
-            manifest=manifest,
-        )
-
-    return _run
+    return _runner(
+        transcode_las_tiled, ".las", overwrite, paths, where=where or None,
+        project=project, compute=compute,
+        out_grid=(tuple(out_scale), tuple(out_offset)), ansi=ansi_eff,
+        manifest=manifest,
+    )
 
 
 def _layout_round_trips(schema, props, project, spark_to_np, computed=None) -> bool:
@@ -569,42 +584,50 @@ def _layout_round_trips(schema, props, project, spark_to_np, computed=None) -> b
     return data_fields == expected
 
 
-def _ply_fused_plan(df, where, path, overwrite, projected=None,
-                    computed=None, ansi=True, manifest=True):
-    """Validate PLY source/writer equivalence and return a ready-to-run
+def _stored_fused_plan(df, where, path, overwrite, projected=None,
+                       computed=None, ansi=True, manifest=True, *, source):
+    """Validate PLY/PCD source/writer equivalence and return a ready-to-run
     closure, or None.  Side-effect free until the closure runs.
 
-    PLY properties are stored world values (no grid), so filters need no
-    translation; the gates are layout round-trip identity (every property
-    survives Spark's type mapping unchanged, in schema order) and the
-    writer-default little endianness.  Multi-element sources qualify: the
-    reader reads only the vertex element and the sink writes only vertex,
-    which is exactly ``transcode_ply_tiled(element_only=True)``.
+    PLY properties and PCD fields are stored world values (no grid), so
+    filters need no translation.  The gates are the transcoder's own
+    uniformity rule (binary record-major sources, one layout), layout
+    round-trip identity (every property survives Spark's type mapping
+    unchanged, in schema order) and the writer-default little endianness.
+    Multi-element PLY sources qualify: the reader reads only the vertex
+    element and the sink writes only vertex, which is exactly
+    ``transcode_ply_tiled(element_only=True)``.  PCD fields are expanded
+    count-1 scalars on both paths.
 
     ``projected`` (the ``select(subset) → write`` shape, including pure
     RENAMES — ``.alias``/``withColumnRenamed`` pairs) re-encodes onto
-    just those properties under their output names — PLY layouts are
+    just those properties under their output names — these layouts are
     self-describing, so unlike LAS there is no format round-trip (or
     fixed field naming) to gate on: each projected property only needs
     its own Spark-type round-trip (VERDICT r10 next #3).
 
-    ``computed`` (round 12 — the PLY twin of the LAS re-grid) maps an
-    output column to its ``(program, out_char, ansi_or_None)`` exprprog
+    ``computed`` (round 12 — the twin of the LAS re-grid) maps an output
+    column to its ``(program, out_char, ansi_or_None)`` exprprog
     extraction: the byte path replays the Catalyst arithmetic bit-exactly
     in numpy over the source property, and the output property takes the
     program's storage type — recenter/rescale shapes like
     ``(x − 50.0).cast('float')`` stop paying the Arrow hop.  ``ansi`` is
     the session cast mode, used when an int-rooted program's own evalMode
     was unreadable."""
-    from .ply_format import SPARK_TO_NP, PlyHeader
-    from .pointcloud_common import headers_with_sizes
-    from .transcode import _ply_uniform
+    from .exprprog import program_refs
+    from .pcd_format import SPARK_TO_NP as PCD_TO_NP
+    from .ply_format import SPARK_TO_NP as PLY_TO_NP
+    from .transcode import _Pcd, _Ply, transcode_pcd_tiled, transcode_ply_tiled
 
+    layout, spark_to_np, transcode = {
+        "ply": (
+            _Ply(element_only=True), PLY_TO_NP,
+            functools.partial(transcode_ply_tiled, element_only=True),
+        ),
+        "pcd": (_Pcd(), PCD_TO_NP, transcode_pcd_tiled),
+    }[source]
     schema = df.schema
-    if "fid" not in schema.names:
-        return None
-    meta = schema["fid"].metadata or {}
-    paths = list(meta.get("paths") or [])
+    paths = _fid_paths(schema)
     if not paths:
         return None
     project = None
@@ -612,20 +635,11 @@ def _ply_fused_plan(df, where, path, overwrite, projected=None,
         project = [(o, s) for o, s in projected if o not in ("fid", "pid")]
         if not project:
             return _no("projection keeps no data columns")
-    try:
-        parsed = headers_with_sizes(PlyHeader.parse_file, paths)
-        headers = [h for h, _ in parsed]
-        little, props = _ply_uniform(paths, headers, "vertex", True)
-    except Exception:
+    got = _source_headers(layout, paths)
+    if got is None:
         return None
-    for h, size in parsed:
-        el = h.element("vertex")
-        if el is not None and size < h.section_offset("vertex") + el.byte_size:
-            return _no(
-                f"{h.location or 'source'}: vertex section shorter than"
-                " the header claims (general sink writes partial records)"
-            )
-    if not little:
+    _, endian, props = got
+    if endian != "<":
         return None  # the sink writes little-endian by default
     computed = computed or {}
     if (
@@ -636,7 +650,7 @@ def _ply_fused_plan(df, where, path, overwrite, projected=None,
         project = None  # identity projection → pure byte copy, no re-encode
     # projected mode compares against the projected subset — the
     # DataFrame's schema IS the projection, in order
-    if not _layout_round_trips(schema, props, project, SPARK_TO_NP, computed):
+    if not _layout_round_trips(schema, props, project, spark_to_np, computed):
         return None
     prop_names = {n for n, _ in props}
     if any(name not in prop_names for name, _, _ in where):
@@ -644,8 +658,6 @@ def _ply_fused_plan(df, where, path, overwrite, projected=None,
     # every column a program references must be stored in the source
     # (round 12: programs may span several columns of one record — the
     # affine-transform shape)
-    from .exprprog import program_refs
-
     for name, (prg, _oc2, _m2) in computed.items():
         if name not in prop_names:
             # a computed NEW column: the transcode layout is derived from
@@ -669,129 +681,18 @@ def _ply_fused_plan(df, where, path, overwrite, projected=None,
     }
     if len(modes) > 1:
         return _no("computed columns mix ANSI and LEGACY cast modes")
-    ansi_eff = modes.pop() if modes else bool(ansi)
-    compute = {k: (p, oc) for k, (p, oc, _m) in computed.items()} or None
-
-    def _run(spark, out_dir):
-        from .pointcloud_common import clear_existing_outputs
-        from .transcode import transcode_ply_tiled
-
-        os.makedirs(out_dir, exist_ok=True)
-        clear_existing_outputs(out_dir, ".ply", overwrite)
-        transcode_ply_tiled(
-            spark, paths, out_dir, where=where or None, element_only=True,
-            project=project, compute=compute, ansi=ansi_eff,
-            manifest=manifest,
-        )
-
-    return _run
-
-
-def _pcd_fused_plan(df, where, path, overwrite, projected=None,
-                    computed=None, ansi=True, manifest=True):
-    """Validate PCD source/writer equivalence and return a ready-to-run
-    closure, or None.  Binary record-major PCD only; stored-value filters;
-    layout must round-trip Spark's type mapping unchanged (same gates as
-    PLY — PCD fields are expanded count-1 scalars on both paths, and the
-    same projected re-encode applies: the output header is exactly the
-    projected fields, count-1 each, like the general sink writes).
-    ``computed``/``ansi`` are the round-12 computed-column shape, exactly
-    as in ``_ply_fused_plan``."""
-    from .pcd_format import SPARK_TO_NP, PcdHeader
-    from .pointcloud_common import headers_with_sizes
-
-    schema = df.schema
-    if "fid" not in schema.names:
-        return None
-    meta = schema["fid"].metadata or {}
-    paths = list(meta.get("paths") or [])
-    if not paths:
-        return None
-    project = None
-    if projected is not None:
-        project = [(o, s) for o, s in projected if o not in ("fid", "pid")]
-        if not project:
-            return _no("projection keeps no data columns")
-    try:
-        parsed = headers_with_sizes(PcdHeader.parse_file, paths)
-    except Exception:
-        return None
-    for h, size in parsed:
-        if h.data_kind == "binary" and size < h.data_offset + h.points * h.stride:
-            return _no(
-                f"{h.location or 'source'}: data section shorter than the"
-                " header claims (general sink writes partial records)"
-            )
-    headers = [h for h, _ in parsed]
-    sigs = {
-        (h.data_kind, tuple((f.name, f.np_char) for f in h.fields))
-        for h in headers
-    }
-    if len(sigs) != 1:
-        return None
-    data_kind, props = next(iter(sigs))
-    if data_kind != "binary":
-        return None  # ascii / binary_compressed re-encode via the sink
-    computed = computed or {}
-    if (
-        project is not None
-        and not computed
-        and project == [(n, n) for n, _ in props]
-    ):
-        project = None  # identity projection → pure byte copy, no re-encode
-    if not _layout_round_trips(schema, props, project, SPARK_TO_NP, computed):
-        return None
-    prop_names = {n for n, _ in props}
-    if any(name not in prop_names for name, _, _ in where):
-        return None
-    # every column a program references must be stored in the source
-    # (round 12: programs may span several columns of one record — the
-    # affine-transform shape)
-    from .exprprog import program_refs
-
-    for name, (prg, _oc2, _m2) in computed.items():
-        if name not in prop_names:
-            # a computed NEW column: the transcode layout is derived from
-            # stored properties, so there is no byte-path equivalent —
-            # decline (the general sink writes the extra property)
-            return _no(
-                f"computed column {name!r} is not a stored source"
-                " property (new columns have no byte-path equivalent)"
-            )
-        missing = program_refs(prg) - prop_names
-        if missing:
-            return _no(
-                f"computed column {name!r} references {sorted(missing)}"
-                " which are not stored source properties"
-            )
-    modes = {
-        m for _p, oc, m in computed.values()
-        if oc.startswith("i") and m is not None
-    }
-    if len(modes) > 1:
-        return _no("computed columns mix ANSI and LEGACY cast modes")
-    ansi_eff = modes.pop() if modes else bool(ansi)
-    compute = {k: (p, oc) for k, (p, oc, _m) in computed.items()} or None
-
-    def _run(spark, out_dir):
-        from .pointcloud_common import clear_existing_outputs
-        from .transcode import transcode_pcd_tiled
-
-        os.makedirs(out_dir, exist_ok=True)
-        clear_existing_outputs(out_dir, ".pcd", overwrite)
-        transcode_pcd_tiled(
-            spark, paths, out_dir, where=where or None, project=project,
-            compute=compute, ansi=ansi_eff,
-            manifest=manifest,
-        )
-
-    return _run
+    return _runner(
+        transcode, layout.ext, overwrite, paths, where=where or None,
+        project=project,
+        compute={k: (p, oc) for k, (p, oc, _m) in computed.items()} or None,
+        ansi=modes.pop() if modes else bool(ansi), manifest=manifest,
+    )
 
 
 _PLANNERS = {
     "las": _las_fused_plan,
-    "ply": _ply_fused_plan,
-    "pcd": _pcd_fused_plan,
+    "ply": functools.partial(_stored_fused_plan, source="ply"),
+    "pcd": functools.partial(_stored_fused_plan, source="pcd"),
 }
 
 

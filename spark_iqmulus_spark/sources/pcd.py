@@ -57,6 +57,7 @@ from .pointcloud_common import (
     ignore_corrupt_option,
     pmap_merges,
     parse_sections,
+    restore_names,
 )
 from ..functions.schema_merge import merge_all
 
@@ -392,14 +393,7 @@ class PcdWriter(DataSourceArrowWriter):
                 bounds_by_fid.setdefault(fid, []).append(bounds)
         names: dict[int, str] = {}
         if self.fid_paths is not None:
-            bases = [
-                os.path.splitext(os.path.basename(p))[0] for p in self.fid_paths
-            ]
-            dup = {b for b in bases if bases.count(b) > 1}
-            names = {
-                fid: (f"{b}-fid{fid}.pcd" if b in dup else f"{b}.pcd")
-                for fid, b in enumerate(bases)
-            }
+            names = restore_names(self.fid_paths, ".pcd")
         jobs = []
         job_fids = []
         for fid, parts in sorted(by_fid.items()):

@@ -47,6 +47,7 @@ from .pointcloud_common import (
     ignore_corrupt_option,
     pmap_merges,
     parse_sections,
+    restore_names,
 )
 from ..functions.schema_merge import merge_all
 
@@ -403,14 +404,7 @@ class PlyWriter(DataSourceArrowWriter):
                 bounds_by_fid.setdefault(fid, []).append(bounds)
         names: dict[int, str] = {}
         if self.fid_paths is not None:
-            bases = [
-                os.path.splitext(os.path.basename(p))[0] for p in self.fid_paths
-            ]
-            dup = {b for b in bases if bases.count(b) > 1}
-            names = {
-                fid: (f"{b}-fid{fid}.ply" if b in dup else f"{b}.ply")
-                for fid, b in enumerate(bases)
-            }
+            names = restore_names(self.fid_paths, ".ply")
         jobs = []
         job_fids = []
         for fid, parts in sorted(by_fid.items()):

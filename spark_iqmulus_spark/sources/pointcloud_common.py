@@ -172,6 +172,31 @@ def clear_existing_outputs(
         fsio.remove(path.rstrip("/") + "/" + f, filesystem)
 
 
+def restore_names(paths, ext: str) -> dict[int, str]:
+    """fid → output basename for the name-restoring commits (the writers'
+    fid-restore convention and the fused tiled transcoders): the source
+    basename, with ``-fid<N>`` added when several sources share it.  A tag
+    can equal another source's own name (``a``, ``a`` and ``a-fid1`` give
+    ``a-fid1`` twice), so tagging repeats until every name is distinct:
+    two sources sharing an output would overwrite each other's points."""
+    from collections import Counter
+
+    bases = [os.path.splitext(os.path.basename(p))[0] for p in paths]
+    tagged = {b for b, k in Counter(bases).items() if k > 1}
+    while True:
+        names = [
+            f"{b}-fid{fid}{ext}" if b in tagged else f"{b}{ext}"
+            for fid, b in enumerate(bases)
+        ]
+        seen = Counter(names)
+        clash = {
+            b for b, nm in zip(bases, names) if b not in tagged and seen[nm] > 1
+        }
+        if not clash:
+            return dict(enumerate(names))
+        tagged |= clash
+
+
 def append_file(out, src_path: str, filesystem=None) -> None:
     """Append ``src_path``'s bytes to the open binary file object ``out``.
 

@@ -23,6 +23,8 @@ import os
 
 from pyspark.sql import DataFrame
 
+from .pointcloud_common import restore_names
+
 
 def save_ply(df: DataFrame, path: str, little_endian: bool = True, mode: str = "overwrite") -> None:
     (
@@ -149,14 +151,15 @@ def save_partitioned_by_fid(df: DataFrame, out_dir: str, fmt: str = "las", **opt
     paths = (fid_field.metadata or {}).get("paths")
     if not paths:
         raise ValueError("fid column has no 'paths' metadata — not a point-cloud read?")
-    bases = [os.path.splitext(os.path.basename(p))[0] for p in paths]
     if fmt in ("las", "ply"):
-        ext = f".{fmt}"
         w = df.repartition("fid").write.format(fmt).mode("overwrite")
         for k, v in opts.items():
             w = w.option(k, str(v))
         w.save(out_dir)
-        return [os.path.join(out_dir, b + ext) for b in bases]
+        return [
+            os.path.join(out_dir, name)
+            for name in restore_names(paths, f".{fmt}").values()
+        ]
     if fmt == "xyz":
         cols = [c for c in df.columns if c != "pid"]
         (
@@ -168,9 +171,9 @@ def save_partitioned_by_fid(df: DataFrame, out_dir: str, fmt: str = "las", **opt
             .csv(out_dir)
         )
         written = []
-        for fid, b in enumerate(bases):
+        for fid, name in restore_names(paths, "").items():
             src = os.path.join(out_dir, f"fid={fid}")
-            dest = os.path.join(out_dir, b)
+            dest = os.path.join(out_dir, name)
             if os.path.isdir(src):
                 os.rename(src, dest)
                 written.append(dest)

@@ -1,4 +1,5 @@
-"""Fused LAS→LAS transcode: filter/merge tiles without the Arrow boundary tax.
+"""Fused byte path for LAS, PLY and PCD: filter, project, re-grid and merge
+point-cloud files without the Arrow boundary tax.
 
 ``df.write.format("las")`` is the general path: any DataFrame, any plan.
 Its cost floor at scale is NOT our writer code (measured 1.3 s single-thread
@@ -6,21 +7,41 @@ for 30M points) but the JVM→Python Arrow hop every Python data-source sink
 pays — ~12 s for 840 MB on a 32-core box, barely parallelizable (the
 row→Arrow conversion + socket framing dominate; see SCALE.md §write).
 
-For the dominant production shapes — *merge N tiles into one file* (lasmerge)
-and *filter/crop then write* (las2las) — the data never needs to enter the
-JVM at all.  ``transcode_las`` keeps point bytes in Python workers
-end-to-end:
+For the dominant production shapes — *merge N tiles into one file*
+(lasmerge), *filter/crop/project then write* (las2las) and *convert LAS to
+PLY* — the data never needs to enter the JVM at all.  One engine keeps
+point bytes in Python workers end-to-end, for every format:
 
-1. driver: header-parse the sources (threaded), check layout uniformity,
-   plan record-aligned ranges (same planner as the reader);
-2. one Spark job over the *spec rows only* (path/offset/count — a few dozen
-   bytes each): each task bulk-reads its byte range, applies the optional
-   predicate in numpy, writes the kept records as a raw part file, and
-   returns a small stats row (count, world bounds, return histogram,
-   ExtraBytes min/max);
-3. driver: merge stats into one LAS header (same arithmetic as
-   ``LasWriter._merge_one``) and concatenate parts with in-kernel
-   ``sendfile``.
+1. driver (``_transcode``): header-parse the sources (threaded), check that
+   they share one layout, and plan record-aligned byte ranges — one spec
+   row per task (path, offset, count and the file's grid, a few dozen
+   bytes each);
+2. ONE Spark job (``_scan``, one ``mapInPandas`` worker): each task
+   bulk-reads its range, applies the optional predicate in numpy,
+   re-encodes the kept records when the output layout differs, writes them
+   as a raw part file, and returns one small stats row;
+3. driver: group the stats rows by destination, rebuild each destination's
+   header from its merged stats, and concatenate its parts with in-kernel
+   ``sendfile``; then write the ``_manifest`` sidecar.
+
+Each step reads the format's facts from a small per-format layout
+(``_Las``, ``_Ply``, ``_Pcd`` and the cross-format ``_LasToPly``): the header
+parser, the uniformity signature every source must share, the record
+section ``(offset, count, stride)`` and grid of a file, the output-layout
+rule, and the output-header builder.  The output-layout rule is data the
+worker executes, not a branch in it: LAS re-encodes onto the smallest
+standard point format covering the projected names and zero-fills the rest;
+PLY/PCD keep exactly the projected ``(out, src)`` pairs, renames included,
+and a computed field takes its program's storage char.  No projection and
+no computed field means a verbatim byte copy.  LAS header statistics
+(world bounds, return histogram, ExtraBytes min/max) are the one LAS-only
+step in the worker.
+
+Merged and tiled variants differ only in the fid→destination map fed to
+the one driver: merged sends every source to one file, always written
+(possibly a valid empty file); tiled sends each source to its restored name
+(``pointcloud_common.restore_names``) and skips sources whose records were
+all filtered out.
 
 Only spec and stats rows cross the JVM↔Python boundary; point data moves
 disk→numpy→disk inside each worker.  Measured at 30M points / 840 MB:
@@ -32,12 +53,15 @@ driver commit through object storage / HDFS; the default ``None`` keeps the
 POSIX ``sendfile`` fast path.
 
 Reference parity: the reference's direct save actions write partition-local
-files from the relation bytes (``las/package.scala:45-98``); this is the
-same byte-path idea expressed as one Spark job + driver commit.
+files from the relation bytes (``las/package.scala:45-98``,
+``ply/package.scala:40-69``); this is the same byte-path idea expressed as
+one Spark job + driver commit.
 """
 
 from __future__ import annotations
 
+import dataclasses
+import logging
 import operator
 import os
 import uuid
@@ -47,8 +71,12 @@ import numpy as np
 from pyspark.sql import SparkSession
 
 from . import fsio
-from .las_format import LasHeader
-from .pointcloud_common import append_file, pmap_headers
+from .las_format import POINT_FORMATS, LasHeader, format_from_schema
+from .pcd_format import PcdField, PcdHeader
+from .ply_format import PlyElement, PlyHeader, PlyProperty
+from .pointcloud_common import append_file, pmap_headers, pmap_merges, restore_names
+
+_log = logging.getLogger(__name__)
 
 _OPS = {
     "==": operator.eq,
@@ -62,14 +90,7 @@ _OPS = {
 #: default per-task byte range (matches the reader's splits at this size)
 _TARGET_BYTES = 32 << 20
 
-
-def _computed_props(props, compute):
-    """Output ``(name, np_char)`` layout: each computed property takes its
-    program's storage char (``extract_program_any`` out_char), the rest
-    keep their source char."""
-    if not compute:
-        return list(props)
-    return [(n, compute[n][1] if n in compute else c) for n, c in props]
+_XYZ = ("x", "y", "z")
 
 
 def normalize_project(project) -> list[tuple[str, str]]:
@@ -84,6 +105,25 @@ def normalize_project(project) -> list[tuple[str, str]]:
     if len(set(outs)) != len(outs):
         raise ValueError(f"duplicate projected output names in {outs}")
     return pairs
+
+
+def _normalize_compute(compute) -> dict:
+    """``compute`` entries → ``{name: (exprprog program, out_char)}``.  A
+    bare program is int32-rooted (the pre-r12 re-grid contract); pre-r12
+    programs also carry bare ``("col",)`` leaves that bound to a single
+    passed array — the replay receives the full structured record, so
+    rebind them to the entry's own column name."""
+    out = {}
+    for name, v in (compute or {}).items():
+        prog, oc = (
+            v if isinstance(v, tuple) and len(v) == 2 and isinstance(v[1], str)
+            else (v, "i4")
+        )
+        out[name] = (
+            [("col", name) if op[0] == "col" and len(op) == 1 else op for op in prog],
+            oc,
+        )
+    return out
 
 
 def _resolve_paths(src, ext: str = ".las", filesystem=None) -> list[str]:
@@ -107,35 +147,295 @@ def _resolve_paths(src, ext: str = ".las", filesystem=None) -> list[str]:
     return sorted(_glob.glob(src))
 
 
-def _check_uniform(headers: list[LasHeader], paths: list[str]) -> None:
-    """Transcode concatenates raw records, so every source must share one
-    layout: format, stride, scale/offset (bytes are scaled ints — mixing
-    grids would silently shift coordinates), and ExtraBytes layout.
-    Heterogeneous inputs go through the general ``df.write`` path, which
-    re-encodes per record."""
-    h0 = headers[0]
-    sig0 = (
-        h0.pdr_format,
-        h0.stride,
-        h0.scale,
-        h0.offset,
-        tuple((e.name, e.np_char) for e in h0.extra_fields),
-    )
-    for p, h in zip(paths[1:], headers[1:]):
-        sig = (
-            h.pdr_format,
-            h.stride,
-            h.scale,
-            h.offset,
+# -- per-format layouts ---------------------------------------------------------
+
+
+class _Layout:
+    """Format facts the engine reads.  The base holds the stored-value
+    output rule PLY and PCD share; subclasses give the parser, signature,
+    record section and header builder.  One instance serves one call."""
+
+    noun, nouns = "field", "fields"
+    #: fields whose ``where`` clauses compare WORLD values (offset + scale·raw)
+    world = ()
+    #: what ``signature`` compares, for the uniformity error
+    requires = "a uniform layout"
+    #: record byte order; the driver sets it from the sources
+    endian = "<"
+
+    def __init__(self, project=None, compute=None):
+        self.project = project
+        self.compute = _normalize_compute(compute)
+
+    def check_uniform(self, paths, headers):
+        """Every source must share the first one's signature: the engine
+        concatenates raw records.  Heterogeneous inputs go through the
+        general ``df.write`` path, which re-encodes per record.  Returns the
+        record layout ``(endian, [(name, np_char)])``."""
+        sig0 = self.signature(paths[0], headers[0])
+        for p, h in zip(paths[1:], headers[1:]):
+            sig = self.signature(p, h)
+            if sig != sig0:
+                raise ValueError(
+                    f"{self.name} requires {self.requires}; {p} has {sig} vs"
+                    f" {paths[0]}: {sig0} — use df.write for heterogeneous"
+                    " inputs"
+                )
+        return self.record(headers[0])
+
+    def grid(self, h):
+        """``(scale3, offset3)`` of a file; stored-value formats have none."""
+        return (1.0, 1.0, 1.0), (0.0, 0.0, 0.0)
+
+    def output(self, h0, fields):
+        """Stored-value rule (PLY/PCD): the output record is exactly the
+        projected ``(out, src)`` pairs, in order, renames included; a
+        computed field replays its program over the SOURCE record and takes
+        the program's storage char (an uncast double expression over a
+        float property widens it to f8, like the general sink).  Compute
+        without project keeps the identity layout.  Returns ``(fill,
+        out_fields, las_stats)``; ``fill`` None is a byte copy."""
+        project, compute = self.project, self.compute
+        if project is None and not compute:
+            return None, list(fields), None
+        by_name = dict(fields)
+        pairs = normalize_project(
+            [n for n, _ in fields] if project is None else project
+        )
+        missing = [s for _, s in pairs if s not in by_name]
+        if missing:
+            raise ValueError(
+                f"projected {self.nouns} {missing} not in the source layout"
+            )
+        outs = [o for o, _ in pairs]
+        bad = sorted(set(compute) - set(outs))
+        if bad:
+            raise ValueError(
+                f"computed {self.nouns} {bad} not among the output"
+                f" {self.nouns} {sorted(outs)}"
+            )
+        fill = [(o, s, *compute.get(o, (None, None)), False) for o, s in pairs]
+        out_fields = [
+            (o, compute[o][1] if o in compute else by_name[s]) for o, s in pairs
+        ]
+        return fill, out_fields, None
+
+
+class _Las(_Layout):
+    name, ext = "transcode_las", ".las"
+    requires = "a uniform layout (format, stride, scale, offset, extras)"
+    world = _XYZ
+    parse = staticmethod(LasHeader.parse_file)
+
+    def __init__(self, project=None, compute=None, out_grid=None):
+        super().__init__(project, compute)
+        self.out_grid = out_grid
+
+    def signature(self, path, h):
+        # bytes are scaled ints: mixing grids would silently shift coordinates
+        return (
+            h.pdr_format, h.stride, h.scale, h.offset,
             tuple((e.name, e.np_char) for e in h.extra_fields),
         )
-        if sig != sig0:
+
+    def record(self, h):
+        return "<", h.point_fields
+
+    def section(self, h):
+        return h.offset_to_points, h.pdr_nb, h.stride
+
+    def grid(self, h):
+        return h.scale, h.offset
+
+    def output(self, h0, fields):
+        """LAS rule: ``project`` re-encodes onto the smallest standard point
+        format covering exactly those names (the las2las column subset),
+        copying them and zero-filling the format's other fields — the
+        general sink's ``rec = np.zeros(n, dtype)`` rule; its records carry
+        no ExtraBytes.  ``compute`` replays programs over each kept record's
+        SOURCE value (the re-grid shape) — standard fields only.  Header stats describe
+        the re-encoded records, on the ``out_grid`` the header declares
+        (default: the source grid)."""
+        project, compute = self.project, self.compute
+        extras = [e.name for e in h0.extra_fields]
+        if compute:
+            bad = sorted(set(compute) - ({n for n, _ in fields} - set(extras)))
+            if bad:
+                raise ValueError(
+                    f"compute supports only standard point fields, got {bad}"
+                )
+            if np.dtype([(n, "<" + c) for n, c in fields]).itemsize != h0.stride:
+                raise ValueError(
+                    "compute requires a standard pdr_length (structured"
+                    " re-encode would drop undescribed trailing bytes) — use"
+                    " df.write.format('las')"
+                )
+        self.fmt, out_fields, keep = h0.pdr_format, list(fields), set(dict(fields))
+        if project is not None:
+            missing = [n for n in project if n not in keep]
+            if missing:
+                raise ValueError(
+                    f"projected fields {missing} not in the source layout"
+                )
+            self.fmt = format_from_schema(set(project))
+            out_fields, extras, keep = list(POINT_FORMATS[self.fmt]), [], set(project)
+            bad = sorted(set(compute) - set(dict(out_fields)))
+            if bad:
+                raise ValueError(
+                    f"computed fields {bad} are not fields of the projected"
+                    f" point format {self.fmt}"
+                )
+        stats = (self.fmt, extras, self.out_grid)
+        if project is None and not compute:
+            return None, out_fields, stats
+        fill = [
+            (n, n, *compute.get(n, (None, None)), False)
+            for n, _ in out_fields
+            if n in keep or n in compute
+        ]
+        return fill, out_fields, stats
+
+    def header(self, dest, rows, srcs, out_fields):
+        """Merged LAS header, same arithmetic as ``LasWriter._merge_one``;
+        the version minor is the max over the destination's sources."""
+        h0, total = srcs[0], sum(r["m"] for r in rows)
+        live = [r for r in rows if r["m"]]
+        extras = []
+        for i, e in enumerate(h0.extra_fields if self.project is None else []):
+            parse = float if e.np_char[0] == "f" else int
+            extras.append(dataclasses.replace(
+                e,
+                vmin=min((parse(r["emin"][i]) for r in live), default=None),
+                vmax=max((parse(r["emax"][i]) for r in live), default=None),
+            ))
+        scale, offset = self.out_grid or (h0.scale, h0.offset)
+        return LasHeader(
+            location=dest,
+            version_minor=(
+                4 if (self.fmt >= 6 or total >= 2**32)
+                else max(h.version_minor for h in srcs)
+            ),
+            pdr_format=self.fmt,
+            pdr_nb=total,
+            scale=tuple(scale),
+            offset=tuple(offset),
+            pmin=tuple(min((r["pmin"][i] for r in live), default=0.0) for i in range(3)),
+            pmax=tuple(max((r["pmax"][i] for r in live), default=0.0) for i in range(3)),
+            pdr_return_nb=tuple(sum(r["ret"][i] for r in rows) for i in range(15)),
+            extra_fields=extras,
+        ).to_bytes()
+
+
+class _Ply(_Layout):
+    name, ext = "transcode_ply", ".ply"
+    noun, nouns = "property", "properties"
+    requires = "a uniform layout (little_endian, properties)"
+    parse = staticmethod(PlyHeader.parse_file)
+
+    def __init__(self, element="vertex", element_only=False, project=None, compute=None):
+        super().__init__(project, compute)
+        self.element, self.element_only = element, element_only
+
+    def signature(self, path, h):
+        if h.is_ascii:
             raise ValueError(
-                f"transcode_las requires a uniform layout; {p} has"
-                f" (format, stride, scale, offset, extras)={sig} vs"
-                f" {paths[0]}: {sig0} — use df.write.format('las') for"
-                " heterogeneous inputs"
+                f"transcode_ply requires binary PLY; {path} is ascii — use"
+                " df.write.format('ply') for ascii inputs"
             )
+        el = h.element(self.element)
+        if el is None:
+            raise ValueError(f"{path}: no element {self.element!r}")
+        if not self.element_only:
+            for other in h.elements:
+                if other.name != self.element and other.count:
+                    raise ValueError(
+                        f"{path}: non-empty element {other.name!r} cannot be"
+                        " merged (index rebasing not supported) — pass"
+                        " element_only=True to transcode just"
+                        f" {self.element!r}, or use df.write.format('ply')"
+                    )
+        return h.little_endian, tuple((p.name, p.np_char) for p in el.properties)
+
+    def record(self, h):
+        props = h.element(self.element).properties
+        return ("<" if h.little_endian else ">"), [(p.name, p.np_char) for p in props]
+
+    def section(self, h):
+        el = h.element(self.element)
+        return h.section_offset(self.element), el.count, el.stride
+
+    def header(self, dest, rows, srcs, out_fields):
+        return PlyHeader(
+            location=dest,
+            little_endian=self.endian == "<",
+            elements=[PlyElement(
+                self.element,
+                sum(r["m"] for r in rows),
+                [PlyProperty(n, c) for n, c in out_fields],
+            )],
+        ).to_bytes()
+
+
+class _Pcd(_Layout):
+    name, ext = "transcode_pcd", ".pcd"
+    requires = "a uniform layout (fields)"
+    parse = staticmethod(PcdHeader.parse_file)
+
+    def signature(self, path, h):
+        # ascii and binary_compressed (SoA, not record-major: a byte copy
+        # would interleave wrong) go through the general sink
+        if h.data_kind != "binary":
+            raise ValueError(
+                f"transcode_pcd requires DATA binary; {path} is"
+                f" {h.data_kind!r} — use df.write.format('pcd')"
+            )
+        return tuple((f.name, f.np_char) for f in h.fields)
+
+    def record(self, h):
+        return "<", [(f.name, f.np_char) for f in h.fields]
+
+    def section(self, h):
+        return h.data_offset, h.points, h.stride
+
+    def header(self, dest, rows, srcs, out_fields):
+        total = sum(r["m"] for r in rows)
+        return PcdHeader(
+            location=dest,
+            fields=[PcdField(n, c) for n, c in out_fields],
+            width=total,
+            points=total,
+            data_kind="binary",
+        ).to_bytes()
+
+
+class _LasToPly(_Las):
+    """LAS sources, one binary little-endian PLY ``vertex`` output: x/y/z
+    become float64 WORLD values through each file's own grid (the spec
+    row's), other columns keep their stored LAS type."""
+
+    name = "transcode_las_to_ply"
+    requires = "one point layout (format, stride, extras)"
+    element, endian = "vertex", "<"
+    header = _Ply.header
+
+    def __init__(self, columns):
+        super().__init__()
+        self.columns = list(columns)
+
+    def signature(self, path, h):
+        # sources may differ in scale/offset: each converts through its own
+        return h.pdr_format, h.stride, tuple((e.name, e.np_char) for e in h.extra_fields)
+
+    def output(self, h0, fields):
+        known = dict(fields)
+        for c in self.columns:
+            if c not in known:
+                raise ValueError(f"unknown column {c!r}; have {sorted(known)}")
+        out_fields = [(c, "f8" if c in _XYZ else known[c]) for c in self.columns]
+        return [(c, c, None, None, c in _XYZ) for c in self.columns], out_fields, None
+
+
+# -- the engine -------------------------------------------------------------------
 
 
 def _spec_frame(spark: SparkSession, specs: list, schema: str):
@@ -152,131 +452,49 @@ def _spec_frame(spark: SparkSession, specs: list, schema: str):
     )
 
 
-def _las_scan_stats(
-    spark: SparkSession,
-    paths: list[str],
-    headers: list[LasHeader],
-    where,
-    target_bytes: int,
-    filesystem,
-    part_dir: str,
-    project: list[str] | None = None,
-    compute: dict | None = None,
-    out_grid: tuple | None = None,
-    ansi: bool = True,
-) -> list:
-    """Shared scan stage of the fused LAS byte path: plan record-aligned
-    ranges over ``paths``, run ONE Spark job that bulk-reads / filters /
-    writes raw-record part files under ``part_dir``, and return the stats
-    rows sorted by (fid, rec_start).  Callers own ``part_dir`` cleanup.
+def _las_stats(rec, fmt, extras, grid):
+    """LAS-only header statistics of one part: world bounds on the grid the
+    output header declares (the general sink's rule, las.py ``world =
+    self.offset + self.scale * sub[name]``), the return-number histogram
+    and ExtraBytes min/max.  Not derived from the sidecar bounds:
+    ``column_bounds`` views unsigned values as signed and skips NaN, the
+    header takes ``.min().item()``, which does neither.  Extras travel as
+    repr strings so int64 values beyond 2^53 stay exact."""
+    scale, offset = grid
+    pmin, pmax = [], []
+    for ax, name in enumerate(_XYZ):
+        world = offset[ax] + scale[ax] * rec[name].astype(np.float64)
+        pmin.append(float(world.min()))
+        pmax.append(float(world.max()))
+    r = rec["flags"] & 0x7 if fmt < 6 else rec["return"] & 0xF
+    ret = [int(v) for v in np.bincount(np.minimum(r, 14), minlength=15)]
+    emin = [repr(rec[e].min().item()) for e in extras]
+    emax = [repr(rec[e].max().item()) for e in extras]
+    return pmin, pmax, ret, emin, emax
 
-    ``project`` re-encodes each kept record onto the smallest standard
-    point format covering exactly those field names (the las2las
-    column-subset shape): projected fields copy over, the target format's
-    other fields zero-fill — the same dtype-building rule as the general
-    sink (las.py ``rec = np.zeros(n, dtype)``), so header stats are
-    computed from the RE-ENCODED records.  Filters still evaluate on the
-    full source record (Catalyst pushes predicates below a Project, so
-    the general sink sees pre-projection values too).
 
-    ``compute`` maps ``x``/``y``/``z`` to exprprog programs
-    (``sources/exprprog.py``) replayed over each kept record's SOURCE
-    value — the re-grid (computed-column las2las) shape; ``ansi`` picks
-    the cast-overflow semantics the general sink would apply.
-    ``out_grid`` (``(scale3, offset3)``) is the grid the OUTPUT header
-    will declare: stats (world bounds) are computed on it, since that is
-    how the general sink computes them (las.py ``world = self.offset +
-    self.scale * sub[name]``); default is the source grid."""
-    h0 = headers[0]
-    fmt = h0.pdr_format
-    stride = h0.stride
-    scale, offset = h0.scale, h0.offset
-    # the OUTPUT header's grid drives the world-bound stats (general-sink
-    # rule); filters below keep comparing on the SOURCE grid
-    stat_scale, stat_offset = out_grid if out_grid is not None else (scale, offset)
-    point_fields = h0.point_fields  # [(name, np_char)] incl. extras
-    extra_names = [e.name for e in h0.extra_fields]
-    if compute:
-        # normalize entries: bare program → int32 root (the pre-r12
-        # re-grid contract); else (program, out_char) pairs.  Pre-r12
-        # programs also carry bare ("col",) leaf ops that bound to a
-        # single passed array — the replay now receives the full
-        # structured record, so rebind them to the entry's own column
-        # name (ADVICE r12: without this the bare op pushes the whole
-        # struct and the float64 coercion raises in the executor)
-        def _norm_compute(name, v):
-            prog, oc = (
-                v
-                if isinstance(v, tuple) and len(v) == 2
-                and isinstance(v[1], str)
-                else (v, "i4")
-            )
-            prog = [
-                ("col", name)
-                if op[0] == "col" and len(op) == 1
-                else op
-                for op in prog
-            ]
-            return prog, oc
+_SPEC_SCHEMA = (
+    "fid int, path string, offset long, rec_start long, n long,"
+    " sx double, sy double, sz double, ox double, oy double, oz double"
+)
+_STATS_SCHEMA = (
+    "fid int, rec_start long, part string, m long, read_n long,"
+    " pmin array<double>, pmax array<double>, ret array<long>,"
+    " emin array<string>, emax array<string>,"
+    " dmin array<string>, dmax array<string>"
+)
 
-        compute = {k: _norm_compute(k, v) for k, v in compute.items()}
-        std = {n for n, _ in point_fields} - set(extra_names)
-        bad = sorted(set(compute) - std)
-        if bad:
-            raise ValueError(
-                f"compute supports only standard point fields, got {bad}"
-            )
-        rec_itemsize = np.dtype(
-            [(n, "<" + c) for n, c in point_fields]
-        ).itemsize
-        if rec_itemsize != stride:
-            raise ValueError(
-                "compute requires a standard pdr_length (structured"
-                " re-encode would drop undescribed trailing bytes) — use"
-                " df.write.format('las')"
-            )
-    if where:
-        known = {n for n, _ in point_fields}
-        for name, op, _ in where:
-            if name not in known:
-                raise ValueError(f"unknown field {name!r}; have {sorted(known)}")
-            if op not in _OPS:
-                raise ValueError(f"unknown op {op!r}; have {sorted(_OPS)}")
-    out_dtype_spec = copy_names = None
-    stat_fields = list(point_fields)  # sidecar layout = output layout
-    if project is not None:
-        from .las_format import POINT_FORMATS, format_from_schema
 
-        src_names = {n for n, _ in point_fields}
-        missing = [n for n in project if n not in src_names]
-        if missing:
-            raise ValueError(
-                f"projected fields {missing} not in the source layout"
-            )
-        out_fmt = format_from_schema(set(project))
-        out_fields = POINT_FORMATS[out_fmt]
-        out_dtype_spec = [(n, "<" + c) for n, c in out_fields]
-        keep = set(project)
-        copy_names = [n for n, _ in out_fields if n in keep]
-        fmt = out_fmt  # stats (return-number field) follow the OUTPUT format
-        extra_names = []  # standard-format output carries no ExtraBytes
-        stat_fields = list(out_fields)
-
-    # -- plan: record-aligned ranges, one spec row per task-sized slice ----
-    from .binary_section import plan_record_ranges
-
-    specs = []
-    for fid, (p, h) in enumerate(zip(paths, headers)):
-        for start, n in plan_record_ranges(h.pdr_nb, stride, target_bytes):
-            specs.append((fid, p, h.offset_to_points, start, n))
-
-    rec_dtype_spec = [(n, "<" + c) for n, c in point_fields]
-    ret_field = "flags" if fmt < 6 else "return"
-    n_extras = len(extra_names)
-    where_local = list(where) if where else []
-    compute_local = sorted(compute.items()) if compute else []
-    ansi_local = bool(ansi)
-    stat_fields_local = list(stat_fields)
+def _scan(
+    spark, specs, part_dir, filesystem, *, fields, endian, stride, where,
+    world, fill, out_fields, las, ansi,
+):
+    """The one Spark job: per spec row, bulk-read the byte range, filter,
+    encode the output records (``fill``), write them as a raw part file
+    under ``part_dir`` and return a stats row.  Stats rows come back sorted
+    by (fid, rec_start)."""
+    src_spec = [(n, endian + c) for n, c in fields]
+    out_spec = [(n, endian + c) for n, c in out_fields]
     fs = filesystem  # picklable (pyarrow.fs); carried into the workers
 
     def _work(iterator):
@@ -285,134 +503,79 @@ def _las_scan_stats(
         from .automanifest import column_bounds
         from .exprprog import eval_program_typed
 
-        rec_dtype = np.dtype(rec_dtype_spec)
+        src_dtype = np.dtype(src_spec)
+        out_dtype = np.dtype(out_spec)
         for pdf in iterator:
             out_rows = []
-            for fid, path, off, start, n in zip(
-                pdf["fid"], pdf["path"], pdf["offset"], pdf["rec_start"], pdf["n"]
-            ):
-                fid, off, start, n = int(fid), int(off), int(start), int(n)
-                with fsio.open_input(path, fs) as f:
-                    f.seek(off + start * stride)
+            for s in pdf.itertuples(index=False):
+                fid, start, n = int(s.fid), int(s.rec_start), int(s.n)
+                scale, origin = (s.sx, s.sy, s.sz), (s.ox, s.oy, s.oz)
+                with fsio.open_input(s.path, fs) as f:
+                    f.seek(int(s.offset) + start * stride)
                     buf = f.read(n * stride)
-                raw = np.frombuffer(buf, dtype=np.uint8).reshape(n, stride)
-                arr = np.frombuffer(buf, dtype=rec_dtype, count=n)
-                if where_local:
+                arr = np.frombuffer(buf, dtype=src_dtype, count=n)
+
+                def value(rec, name, to_world):
+                    if not to_world:
+                        return rec[name]
+                    ax = _XYZ.index(name)
+                    return origin[ax] + scale[ax] * rec[name].astype(np.float64)
+
+                mask = None
+                if where:
                     mask = np.ones(n, dtype=bool)
-                    for name, op, val in where_local:
-                        if name in ("x", "y", "z"):
-                            ax = "xyz".index(name)
-                            col = offset[ax] + scale[ax] * arr[name].astype(
-                                np.float64
-                            )
-                        else:
-                            col = arr[name]
-                        mask &= _OPS[op](col, val)
-                    kept = arr[mask]
-                    # byte-exact copy of kept records (preserves any
-                    # undescribed trailing bytes a nonstandard pdr_length
-                    # carries — a field-wise structured copy would zero them)
-                    kept_raw = raw[mask]
+                    for name, op, val in where:
+                        mask &= _OPS[op](value(arr, name, name in world), val)
+                kept = arr if mask is None else arr[mask]
+                if fill is None:
+                    # byte-exact copy of the kept records (preserves any
+                    # undescribed trailing bytes a nonstandard record
+                    # length carries — a field-wise copy would zero them)
+                    raw = np.frombuffer(buf, dtype=np.uint8).reshape(n, stride)
+                    out, payload = kept, raw if mask is None else raw[mask]
                 else:
-                    kept, kept_raw = arr, raw
-                if out_dtype_spec is not None:
-                    # re-encode onto the target layout: projected fields
-                    # copy, the rest stay zero (general-sink rule); stats
-                    # below read the ENCODED records so header bounds and
-                    # return counts describe what is actually written
-                    enc = np.zeros(len(kept), dtype=np.dtype(out_dtype_spec))
-                    for nm in copy_names:
-                        enc[nm] = kept[nm]
-                    # computed columns replay over the SOURCE value (the
-                    # general sink's Project also reads pre-projection
-                    # attributes), overwriting the plain copy
-                    for nm, (prg, oc) in compute_local:
-                        enc[nm] = eval_program_typed(prg, kept, oc, ansi_local)
-                    kept = kept_raw = enc
-                elif compute_local:
-                    enc = kept.copy()
-                    for nm, (prg, oc) in compute_local:
-                        enc[nm] = eval_program_typed(prg, kept, oc, ansi_local)
-                    kept = kept_raw = enc
-                m = len(kept)
-                pmin, pmax = [0.0] * 3, [0.0] * 3
-                ret = [0] * 15
-                # extras min/max travel as decimal strings so int64 values
-                # beyond 2^53 stay exact (float64/array<double> would round
-                # them, corrupting the read-side file-skip bounds)
-                emin, emax = [""] * n_extras, [""] * n_extras
-                # per-field OUTPUT-record bounds for the _manifest sidecar
-                # (round 13) — same repr-string trick for int64 exactness
-                dmin = [""] * len(stat_fields_local)
-                dmax = [""] * len(stat_fields_local)
-                if m:
-                    for i, (nm, ch) in enumerate(stat_fields_local):
-                        b = column_bounds(kept[nm], ch)
-                        if b is not None:
-                            dmin[i], dmax[i] = repr(b[0]), repr(b[1])
-                if m:
-                    for ax, name in enumerate("xyz"):
-                        world = stat_offset[ax] + stat_scale[ax] * kept[
-                            name
-                        ].astype(np.float64)
-                        pmin[ax] = float(world.min())
-                        pmax[ax] = float(world.max())
-                    r = (
-                        kept["flags"] & 0x7
-                        if fmt < 6
-                        else kept[ret_field] & 0xF
-                    )
-                    ret = [
-                        int(v)
-                        for v in np.bincount(np.minimum(r, 14), minlength=15)
-                    ]
-                    for i, en in enumerate(extra_names):
-                        # .item() keeps ints exact (no float64 rounding)
-                        emin[i] = repr(kept[en].min().item())
-                        emax[i] = repr(kept[en].max().item())
+                    out = payload = np.zeros(len(kept), dtype=out_dtype)
+                    for name, src, prog, oc, to_world in fill:
+                        out[name] = (
+                            value(kept, src, to_world) if prog is None
+                            else eval_program_typed(prog, kept, oc, ansi)
+                        )
+                m = len(out)
+                # per-field output bounds for the _manifest sidecar, repr
+                # strings so int64 values stay exact
+                dmin, dmax = [""] * len(out_fields), [""] * len(out_fields)
+                las_row = [0.0] * 3, [0.0] * 3, [0] * 15, [], []
                 part = ""
                 if m:
-                    part = (
-                        f"{part_dir}/p-{fid}-{start}-{uuid.uuid4().hex[:8]}.bin"
-                    )
+                    for i, (nm, ch) in enumerate(out_fields):
+                        b = column_bounds(out[nm], ch)
+                        if b is not None:
+                            dmin[i], dmax[i] = repr(b[0]), repr(b[1])
+                    if las is not None:
+                        fmt, extras, out_grid = las
+                        las_row = _las_stats(out, fmt, extras, out_grid or (scale, origin))
+                    part = f"{part_dir}/p-{fid}-{start}-{uuid.uuid4().hex[:8]}.bin"
                     with fsio.open_output(part, fs) as f:
-                        f.write(kept_raw.tobytes())
-                out_rows.append(
-                    {
-                        "fid": fid,
-                        "rec_start": start,
-                        "part": part,
-                        "m": m,
-                        "read_n": n,
-                        "pmin": pmin,
-                        "pmax": pmax,
-                        "ret": ret,
-                        "emin": emin,
-                        "emax": emax,
-                        "dmin": dmin,
-                        "dmax": dmax,
-                    }
-                )
+                        f.write(payload.tobytes())
+                pmin, pmax, ret, emin, emax = las_row
+                out_rows.append({
+                    "fid": fid, "rec_start": start, "part": part, "m": m,
+                    "read_n": n, "pmin": pmin, "pmax": pmax, "ret": ret,
+                    "emin": emin, "emax": emax, "dmin": dmin, "dmax": dmax,
+                })
             yield pd.DataFrame(out_rows)
 
-    spec_df = _spec_frame(spark, specs, "fid int, path string, offset long, rec_start long, n long")
-    stats_schema = (
-        "fid int, rec_start long, part string, m long, read_n long,"
-        " pmin array<double>, pmax array<double>, ret array<long>,"
-        " emin array<string>, emax array<string>,"
-        " dmin array<string>, dmax array<string>"
-    )
-    stats = spec_df.mapInPandas(_work, stats_schema).collect()
+    stats = _spec_frame(spark, specs, _SPEC_SCHEMA).mapInPandas(_work, _STATS_SCHEMA).collect()
     stats.sort(key=lambda r: (r["fid"], r["rec_start"]))
-    return stats, stat_fields
+    return stats
 
 
 def _emit_transcode_sidecar(out_dir, out_fields, dest_rows, filesystem):
     """Auto-manifest for the fused byte paths (round 13): parse the scan
     rows' repr-string ``dmin``/``dmax`` arrays back into typed bounds,
     fold per destination file, and write the ``_manifest`` sidecar.
-    ``dest_rows`` is ``[(dest_path, rows)]``.  Advisory: a failure never
-    fails the transcode."""
+    ``dest_rows`` is ``[(dest_path, rows)]``.  Advisory: a failure is
+    logged as a warning and never fails the transcode."""
     from .automanifest import merge_bounds, write_sidecar
 
     try:
@@ -435,89 +598,104 @@ def _emit_transcode_sidecar(out_dir, out_fields, dest_rows, filesystem):
                 }
             )
         write_sidecar(out_dir, out_fields, entries, filesystem)
-    except Exception:  # pragma: no cover - advisory sidecar only
-        import sys
-        import traceback
-
-        print(
-            "spark_iqmulus_spark: failed to write the _manifest sidecar"
-            f" under {out_dir}:\n{traceback.format_exc()}",
-            file=sys.stderr,
+    except Exception:
+        _log.warning(
+            "failed to write the _manifest sidecar under %s", out_dir,
+            exc_info=True,
         )
 
 
-def _merge_las_stats(
-    out_path: str, stats: list, h0: LasHeader, minor: int, filesystem=None
-) -> int:
-    """Commit one ``.las`` from scan-stage stats rows: merged header (same
-    arithmetic as ``LasWriter._merge_one``) + sendfile part concat, in
-    (fid, rec_start) order.  Returns the point count.  Parts are NOT
-    removed — callers clean the whole part dir."""
-    import dataclasses
+def _transcode(
+    spark, layout, src, out, where, target_bytes, filesystem, ansi, manifest,
+    tiled=False, names=None,
+) -> dict:
+    """The one driver.  Merged (``tiled`` False) writes every source into
+    the file ``out``; tiled writes each source to ``out/<names[fid]>``."""
+    from .binary_section import plan_record_ranges
 
-    fmt = h0.pdr_format
-    total = sum(r["m"] for r in stats)
-    live = [r for r in stats if r["m"]]
-    pmin = tuple(
-        min((r["pmin"][i] for r in live), default=0.0) for i in range(3)
-    )
-    pmax = tuple(
-        max((r["pmax"][i] for r in live), default=0.0) for i in range(3)
-    )
-    ret = tuple(sum(r["ret"][i] for r in stats) for i in range(15))
-    extras = []
-    for i, e in enumerate(h0.extra_fields):
-        parse = float if e.np_char[0] == "f" else int
-        lo = min((parse(r["emin"][i]) for r in live), default=None)
-        hi = max((parse(r["emax"][i]) for r in live), default=None)
-        extras.append(dataclasses.replace(e, vmin=lo, vmax=hi))
-    header = LasHeader(
-        location=out_path,
-        version_minor=4 if (fmt >= 6 or total >= 2**32) else minor,
-        pdr_format=fmt,
-        pdr_nb=total,
-        scale=h0.scale,
-        offset=h0.offset,
-        pmin=pmin,
-        pmax=pmax,
-        pdr_return_nb=ret,
-        extra_fields=extras,
-    )
-    with fsio.open_output(out_path, filesystem) as out:
-        out.write(header.to_bytes())
-        for r in live:
-            append_file(out, r["part"], filesystem)
-    return total
+    fs = filesystem
+    paths = _resolve_paths(src, layout.ext, fs)
+    if not paths:
+        raise FileNotFoundError(f"no {layout.ext} files match {src!r}")
+    headers = pmap_headers(lambda p: layout.parse(p, fs), paths)
+    layout.endian, fields = layout.check_uniform(paths, headers)
+    fill, out_fields, las = layout.output(headers[0], fields)
+    known = {n for n, _ in fields}
+    for name, op, _ in where or ():
+        if name not in known:
+            raise ValueError(f"unknown {layout.noun} {name!r}; have {sorted(known)}")
+        if op not in _OPS:
+            raise ValueError(f"unknown op {op!r}; have {sorted(_OPS)}")
+    stride = layout.section(headers[0])[2]
+    specs = []
+    for fid, (p, h) in enumerate(zip(paths, headers)):
+        offset, count, _ = layout.section(h)
+        scale, origin = layout.grid(h)
+        for start, n in plan_record_ranges(count, stride, target_bytes):
+            specs.append((fid, p, offset, start, n, *scale, *origin))
+
+    # -- the fid→destination map -------------------------------------------------
+    if tiled:
+        names = restore_names(paths, layout.ext) if names is None else names
+        base = out.rstrip("/") + "/"
+        fsio.makedirs(out, fs)
+        part_dir, side_dir = base + f".parts-{uuid.uuid4().hex[:8]}", out
+
+        def dest_of(fid, rows):
+            return base + names[fid] if any(r["m"] for r in rows) else None
+    else:
+        part_dir, side_dir = out + f".parts-{uuid.uuid4().hex[:8]}", os.path.dirname(out) or "."
+
+        def dest_of(fid, rows):
+            return out
+    fsio.makedirs(part_dir, fs)
+    try:
+        stats = _scan(
+            spark, specs, part_dir, fs, fields=fields, endian=layout.endian,
+            stride=stride, where=list(where or ()), world=set(layout.world),
+            fill=fill, out_fields=list(out_fields), las=las, ansi=bool(ansi),
+        )
+        by_fid: dict[int, list] = {}
+        for r in stats:
+            by_fid.setdefault(r["fid"], []).append(r)
+        jobs: dict[str, tuple] = {}
+        for fid, h in enumerate(headers):
+            rows = by_fid.get(fid, [])
+            dest = dest_of(fid, rows)
+            if dest is not None:
+                job = jobs.setdefault(dest, ([], []))
+                job[0].extend(rows)
+                job[1].append(h)
+
+        def commit(dest, rows, srcs):
+            # rebuilt header, then the parts in (fid, rec_start) order;
+            # the part dir is removed as a whole below
+            with fsio.open_output(dest, fs) as f:
+                f.write(layout.header(dest, rows, srcs, out_fields))
+                for r in rows:
+                    if r["m"]:
+                        append_file(f, r["part"], fs)
+
+        pmap_merges(commit, [(d, rows, srcs) for d, (rows, srcs) in jobs.items()])
+        if manifest:
+            _emit_transcode_sidecar(
+                side_dir, out_fields, [(d, rows) for d, (rows, _) in jobs.items()], fs
+            )
+    finally:
+        fsio.rmtree(part_dir, fs)
+    result = {
+        "points": sum(r["m"] for r in stats),
+        "read": sum(r["read_n"] for r in stats),
+        "files": len(paths),
+    }
+    if tiled:
+        result["outputs"] = len(jobs)
+    else:
+        result["parts"] = sum(1 for r in stats if r["m"])
+    return result
 
 
-def _projected_header(h: LasHeader, project: list[str]) -> LasHeader:
-    """Output header for the column-subset (las2las) shape: the smallest
-    standard format covering the projected names, no ExtraBytes, derived
-    stride — grid and version carry over from the source."""
-    import dataclasses
-
-    from .las_format import format_from_schema
-
-    return dataclasses.replace(
-        h,
-        pdr_format=format_from_schema(set(project)),
-        extra_fields=[],
-        pdr_length=0,
-        pdr_offset=0,
-    )
-
-
-def _grid_header(h: LasHeader, out_grid) -> LasHeader:
-    """Header for the re-grid shape: the output declares ``out_grid``
-    (scale/offset triples) — the general sink's rule (header grid comes
-    from the writer options, las.py ``LasHeader(scale=self.scale, ...)``)."""
-    import dataclasses
-
-    if out_grid is None:
-        return h
-    return dataclasses.replace(
-        h, scale=tuple(out_grid[0]), offset=tuple(out_grid[1])
-    )
+# -- public transcoders ----------------------------------------------------------------
 
 
 def transcode_las(
@@ -553,37 +731,10 @@ def transcode_las(
     sendfile path.
     Returns ``{"points": kept, "read": total, "files": n, "parts": n}``.
     """
-    paths = _resolve_paths(src, ".las", filesystem)
-    if not paths:
-        raise FileNotFoundError(f"no .las files match {src!r}")
-    headers = pmap_headers(
-        lambda p: LasHeader.parse_file(p, filesystem), paths
+    return _transcode(
+        spark, _Las(project, compute, out_grid), src, out_path, where,
+        target_bytes, filesystem, ansi, manifest,
     )
-    _check_uniform(headers, paths)
-    minor = max(h.version_minor for h in headers)
-    h_out = headers[0] if project is None else _projected_header(headers[0], project)
-    h_out = _grid_header(h_out, out_grid)
-    part_dir = out_path + f".parts-{uuid.uuid4().hex[:8]}"
-    fsio.makedirs(part_dir, filesystem)
-    try:
-        stats, stat_fields = _las_scan_stats(
-            spark, paths, headers, where, target_bytes, filesystem, part_dir,
-            project=project, compute=compute, out_grid=out_grid, ansi=ansi,
-        )
-        total = _merge_las_stats(out_path, stats, h_out, minor, filesystem)
-        if manifest:
-            _emit_transcode_sidecar(
-                os.path.dirname(out_path) or ".", stat_fields,
-                [(out_path, stats)], filesystem,
-            )
-    finally:
-        fsio.rmtree(part_dir, filesystem)
-    return {
-        "points": total,
-        "read": sum(r["read_n"] for r in stats),
-        "files": len(paths),
-        "parts": sum(1 for r in stats if r["m"]),
-    }
 
 
 def transcode_las_tiled(
@@ -607,68 +758,19 @@ def transcode_las_tiled(
     ``compute``/``out_grid``/``ansi`` are the re-grid shape, exactly as in
     ``transcode_las``.
 
-    ``names`` maps source index (fid) → output basename; default is the
-    writer's fid-restore convention (source basename, ``-fid<N>``
-    disambiguation on collisions).  Sources whose rows are all filtered
-    out produce no output file, matching the general sink.  Layout
-    uniformity is required exactly as in ``transcode_las``.
+    ``names`` maps source index (fid) → output basename (sources mapped to
+    one name merge into that file); default is the writer's fid-restore
+    convention (``pointcloud_common.restore_names``: source basename,
+    ``-fid<N>`` disambiguation on collisions).  Sources whose rows are all
+    filtered out produce no output file, matching the general sink.
+    Layout uniformity is required exactly as in ``transcode_las``; each
+    output header takes its own tile's version minor.
+    Returns ``{"points": kept, "read": total, "files": n, "outputs": n}``.
     """
-    from .pointcloud_common import pmap_merges
-
-    paths = _resolve_paths(src, ".las", filesystem)
-    if not paths:
-        raise FileNotFoundError(f"no .las files match {src!r}")
-    headers = pmap_headers(
-        lambda p: LasHeader.parse_file(p, filesystem), paths
+    return _transcode(
+        spark, _Las(project, compute, out_grid), src, out_dir, where,
+        target_bytes, filesystem, ansi, manifest, tiled=True, names=names,
     )
-    _check_uniform(headers, paths)
-    if names is None:
-        bases = [os.path.splitext(os.path.basename(p))[0] for p in paths]
-        dup = {b for b in bases if bases.count(b) > 1}
-        names = {
-            fid: (f"{b}-fid{fid}.las" if b in dup else f"{b}.las")
-            for fid, b in enumerate(bases)
-        }
-    fsio.makedirs(out_dir, filesystem)
-    part_dir = out_dir.rstrip("/") + f"/.parts-{uuid.uuid4().hex[:8]}"
-    fsio.makedirs(part_dir, filesystem)
-    try:
-        stats, stat_fields = _las_scan_stats(
-            spark, paths, headers, where, target_bytes, filesystem, part_dir,
-            project=project, compute=compute, out_grid=out_grid, ansi=ansi,
-        )
-        by_fid: dict[int, list] = {}
-        for r in stats:
-            by_fid.setdefault(r["fid"], []).append(r)
-        jobs = [
-            (
-                out_dir.rstrip("/") + "/" + names[fid],
-                rows,
-                _grid_header(
-                    headers[fid] if project is None
-                    else _projected_header(headers[fid], project),
-                    out_grid,
-                ),
-                headers[fid].version_minor,
-                filesystem,
-            )
-            for fid, rows in sorted(by_fid.items())
-            if any(r["m"] for r in rows)
-        ]
-        pmap_merges(_merge_las_stats, jobs)
-        if manifest:
-            _emit_transcode_sidecar(
-                out_dir, stat_fields,
-                [(j[0], j[1]) for j in jobs], filesystem,
-            )
-    finally:
-        fsio.rmtree(part_dir, filesystem)
-    return {
-        "points": sum(r["m"] for r in stats),
-        "read": sum(r["read_n"] for r in stats),
-        "files": len(paths),
-        "outputs": len(jobs),
-    }
 
 
 def transcode_ply(
@@ -686,11 +788,11 @@ def transcode_ply(
 ) -> dict:
     """Merge (and optionally filter) binary PLY files into ONE ``.ply``.
 
-    The PLY twin of ``transcode_las`` (VERDICT r7 "What's missing" #2):
-    the same fused byte-path — driver plans record-aligned ranges, one
-    Spark job over spec rows bulk-reads/filters/writes raw records inside
-    Python workers, driver writes the merged header and sendfile-concats
-    the parts.  Point bytes never cross the JVM↔Python Arrow boundary.
+    The PLY member of the fused byte path (VERDICT r7 "What's missing"
+    #2): the driver plans record-aligned ranges, one Spark job over spec
+    rows bulk-reads/filters/writes raw records inside Python workers, the
+    driver writes the merged header and sendfile-concats the parts.  Point
+    bytes never cross the JVM↔Python Arrow boundary.
 
     ``where`` is a conjunction of ``(property, op, value)`` clauses, op in
     ``== != < <= > >=``, compared on the stored value (PLY properties ARE
@@ -710,288 +812,17 @@ def transcode_ply(
     ``compute``/``ansi`` (round 12): recompute named properties with
     exprprog programs replayed bit-exactly in numpy — the PLY twin of the
     LAS re-grid; the output header takes each program's storage type (see
-    ``_ply_scan_stats``).
+    ``_Layout.output``).
     Returns ``{"points": kept, "read": total, "files": n, "parts": n}``.
 
     Reference parity: the direct save actions in
     ``ply/package.scala:40-69`` write relation bytes partition-locally;
     this expresses the same idea as one Spark job + driver commit.
     """
-    from .ply_format import PlyHeader
-
-    paths = _resolve_paths(src, ".ply", filesystem)
-    if not paths:
-        raise FileNotFoundError(f"no .ply files match {src!r}")
-    headers = pmap_headers(
-        lambda p: PlyHeader.parse_file(p, filesystem), paths
+    return _transcode(
+        spark, _Ply(element, element_only, compute=compute), src, out_path,
+        where, target_bytes, filesystem, ansi, manifest,
     )
-    little, props = _ply_uniform(paths, headers, element, element_only)
-    out_props = _computed_props(props, compute)
-    part_dir = out_path + f".parts-{uuid.uuid4().hex[:8]}"
-    fsio.makedirs(part_dir, filesystem)
-    try:
-        stats, stat_fields = _ply_scan_stats(
-            spark, paths, headers, element, little, props, where,
-            target_bytes, filesystem, part_dir,
-            compute=compute, ansi=ansi,
-        )
-        total = _merge_ply_stats(
-            out_path, stats, element, little, out_props, filesystem
-        )
-        if manifest:
-            _emit_transcode_sidecar(
-                os.path.dirname(out_path) or ".", stat_fields,
-                [(out_path, stats)], filesystem,
-            )
-    finally:
-        fsio.rmtree(part_dir, filesystem)
-    return {
-        "points": total,
-        "read": sum(r["read_n"] for r in stats),
-        "files": len(paths),
-        "parts": sum(1 for r in stats if r["m"]),
-    }
-
-
-def _ply_uniform(paths, headers, element: str, element_only: bool):
-    """Uniformity gate shared by the PLY transcoders: binary, one
-    endianness, identical property layout for ``element``; other non-empty
-    elements allowed only under ``element_only``.  Returns
-    ``(little_endian, props)``."""
-    sigs = []
-    for p, h in zip(paths, headers):
-        if h.is_ascii:
-            raise ValueError(
-                f"transcode_ply requires binary PLY; {p} is ascii — use"
-                " df.write.format('ply') for ascii inputs"
-            )
-        el = h.element(element)
-        if el is None:
-            raise ValueError(f"{p}: no element {element!r}")
-        if not element_only:
-            for other in h.elements:
-                if other.name != element and other.count:
-                    raise ValueError(
-                        f"{p}: non-empty element {other.name!r} cannot be"
-                        " merged (index rebasing not supported) — pass"
-                        " element_only=True to transcode just"
-                        f" {element!r}, or use df.write.format('ply')"
-                    )
-        sigs.append(
-            (h.little_endian, tuple((pr.name, pr.np_char) for pr in el.properties))
-        )
-    if len(set(sigs)) > 1:
-        raise ValueError(
-            f"transcode_ply requires a uniform layout; got {set(sigs)} —"
-            " use df.write.format('ply') for heterogeneous inputs"
-        )
-    return sigs[0]
-
-
-def _ply_scan_stats(
-    spark: SparkSession,
-    paths: list[str],
-    headers: list,
-    element: str,
-    little: bool,
-    props,
-    where,
-    target_bytes: int,
-    filesystem,
-    part_dir: str,
-    project: list[str] | None = None,
-    compute: dict | None = None,
-    ansi: bool = False,
-) -> list:
-    """Shared scan stage of the fused PLY byte path (the PLY twin of
-    ``_las_scan_stats``): one Spark job over record-aligned element
-    ranges, raw-record part files under ``part_dir``, stats rows back,
-    sorted by (fid, rec_start).
-
-    ``project`` re-encodes each kept record onto just those properties (in
-    the given order, keeping their source types) — the column-subset
-    shape of ``select(...) → write.format("ply")``.  Entries are source
-    property names, or ``(out_name, src_name)`` pairs for pure renames
-    (``withColumnRenamed``): the output property takes ``out_name`` with
-    ``src_name``'s values and type.  Unlike LAS there is no fixed point
-    format to zero-fill: a PLY layout is self-describing, so the output
-    record is exactly the projected properties.  Filters still evaluate
-    on the full source record (Catalyst pushes predicates below a
-    Project, so the general sink sees pre-projection values too).
-
-    ``compute`` maps an output property to an ``(exprprog program,
-    out_char)`` pair (round 12 — the PLY twin of the LAS re-grid): the
-    program replays bit-exactly in numpy over that pair's SOURCE property
-    values, and the output property takes ``out_char``'s storage (an
-    uncast double expression over a float property widens it to f8, like
-    the general sink would).  ``ansi`` picks the cast semantics for
-    int-rooted programs.  ``compute`` without ``project`` means the
-    identity layout with those properties recomputed."""
-    endian = "<" if little else ">"
-    stride = headers[0].element(element).stride
-    if where:
-        known = {n for n, _ in props}
-        for name, op, _ in where:
-            if name not in known:
-                raise ValueError(f"unknown property {name!r}; have {sorted(known)}")
-            if op not in _OPS:
-                raise ValueError(f"unknown op {op!r}; have {sorted(_OPS)}")
-    if compute and project is None:
-        project = [n for n, _ in props]  # computed-only → identity layout
-    out_dtype_spec = copy_pairs = None
-    if project is not None:
-        by_name = dict(props)
-        copy_pairs = normalize_project(project)
-        missing = [s for _, s in copy_pairs if s not in by_name]
-        if missing:
-            raise ValueError(
-                f"projected properties {missing} not in the source layout"
-            )
-        if compute:
-            outs = {o for o, _ in copy_pairs}
-            bad = sorted(set(compute) - outs)
-            if bad:
-                raise ValueError(
-                    f"computed properties {bad} not among the output"
-                    f" properties {sorted(outs)}"
-                )
-        out_dtype_spec = [
-            (
-                o,
-                endian
-                + (
-                    compute[o][1]
-                    if compute and o in compute
-                    else by_name[s]
-                ),
-            )
-            for o, s in copy_pairs
-        ]
-
-    # -- plan: record-aligned ranges over each file's element section ------
-    from .binary_section import plan_record_ranges
-
-    specs = []
-    for fid, (p, h) in enumerate(zip(paths, headers)):
-        sec_off = h.section_offset(element)
-        n_total = h.element(element).count
-        for start, n in plan_record_ranges(n_total, stride, target_bytes):
-            specs.append((fid, p, sec_off, start, n))
-
-    rec_dtype_spec = [(n, endian + c) for n, c in props]
-    where_local = list(where) if where else []
-    compute_local = dict(compute) if compute else {}
-    ansi_local = bool(ansi)
-    # sidecar layout = output layout: projected/computed when re-encoding,
-    # the source properties on the pure byte-copy path
-    if out_dtype_spec is not None:
-        stat_fields = [(o, s[1:]) for o, s in out_dtype_spec]
-    else:
-        stat_fields = list(props)
-    stat_fields_local = list(stat_fields)
-    fs = filesystem
-
-    def _work(iterator):
-        import pandas as pd
-
-        from .automanifest import column_bounds
-        from .exprprog import eval_program_typed
-
-        rec_dtype = np.dtype(rec_dtype_spec)
-        for pdf in iterator:
-            out_rows = []
-            for fid, path, off, start, n in zip(
-                pdf["fid"], pdf["path"], pdf["offset"], pdf["rec_start"], pdf["n"]
-            ):
-                fid, off, start, n = int(fid), int(off), int(start), int(n)
-                with fsio.open_input(path, fs) as f:
-                    f.seek(off + start * stride)
-                    buf = f.read(n * stride)
-                raw = np.frombuffer(buf, dtype=np.uint8).reshape(n, stride)
-                arr = np.frombuffer(buf, dtype=rec_dtype, count=n)
-                if where_local:
-                    mask = np.ones(n, dtype=bool)
-                    for name, op, val in where_local:
-                        mask &= _OPS[op](arr[name], val)
-                    kept, kept_raw = arr[mask], raw[mask]
-                else:
-                    kept, kept_raw = arr, raw
-                if out_dtype_spec is not None:
-                    enc = np.zeros(len(kept), dtype=np.dtype(out_dtype_spec))
-                    for out_nm, src_nm in copy_pairs:
-                        if out_nm in compute_local:
-                            # computed properties replay over the SOURCE
-                            # value (the general sink's Project also reads
-                            # pre-projection attributes)
-                            prg, oc = compute_local[out_nm]
-                            enc[out_nm] = eval_program_typed(
-                                prg, kept, oc, ansi_local
-                            )
-                        else:
-                            enc[out_nm] = kept[src_nm]
-                    kept_raw = enc
-                    stat_rec = enc
-                else:
-                    stat_rec = kept
-                m = len(kept_raw)
-                dmin = [""] * len(stat_fields_local)
-                dmax = [""] * len(stat_fields_local)
-                if m:
-                    for i, (nm, ch) in enumerate(stat_fields_local):
-                        b = column_bounds(stat_rec[nm], ch)
-                        if b is not None:
-                            dmin[i], dmax[i] = repr(b[0]), repr(b[1])
-                part = ""
-                if m:
-                    part = (
-                        f"{part_dir}/p-{fid}-{start}-{uuid.uuid4().hex[:8]}.bin"
-                    )
-                    with fsio.open_output(part, fs) as f:
-                        f.write(kept_raw.tobytes())
-                out_rows.append(
-                    {
-                        "fid": fid,
-                        "rec_start": start,
-                        "part": part,
-                        "m": m,
-                        "read_n": n,
-                        "dmin": dmin,
-                        "dmax": dmax,
-                    }
-                )
-            yield pd.DataFrame(out_rows)
-
-    spec_df = _spec_frame(spark, specs, "fid int, path string, offset long, rec_start long, n long")
-    stats_schema = (
-        "fid int, rec_start long, part string, m long, read_n long,"
-        " dmin array<string>, dmax array<string>"
-    )
-    stats = spec_df.mapInPandas(_work, stats_schema).collect()
-    stats.sort(key=lambda r: (r["fid"], r["rec_start"]))
-    return stats, stat_fields
-
-
-def _merge_ply_stats(
-    out_path: str, stats: list, element: str, little: bool, props, filesystem=None
-) -> int:
-    """Commit one ``.ply`` from scan-stage stats rows: single-element
-    header + sendfile part concat in (fid, rec_start) order."""
-    from .ply_format import PlyElement, PlyHeader, PlyProperty
-
-    total = sum(r["m"] for r in stats)
-    live = [r for r in stats if r["m"]]
-    header = PlyHeader(
-        location=out_path,
-        little_endian=little,
-        elements=[
-            PlyElement(element, total, [PlyProperty(n, c) for n, c in props])
-        ],
-    )
-    with fsio.open_output(out_path, filesystem) as out:
-        out.write(header.to_bytes())
-        for r in live:
-            append_file(out, r["part"], filesystem)
-    return total
 
 
 def transcode_ply_tiled(
@@ -1014,87 +845,15 @@ def transcode_ply_tiled(
     fused byte path — the PLY twin of ``transcode_las_tiled``.  Sources
     whose rows are all filtered out produce no output, matching the
     general sink.  ``project`` keeps just those properties (in order,
-    source types preserved) — the ``select(subset) → write`` shape.
+    source types preserved) — the ``select(subset) → write`` shape; an
+    ``(out_name, src_name)`` entry is a pure rename.
     ``compute``/``ansi`` (round 12) recompute named output properties with
     exprprog programs, each taking its program's storage type (see
-    ``_ply_scan_stats``)."""
-    from .ply_format import PlyHeader
-    from .pointcloud_common import pmap_merges
-
-    paths = _resolve_paths(src, ".ply", filesystem)
-    if not paths:
-        raise FileNotFoundError(f"no .ply files match {src!r}")
-    headers = pmap_headers(
-        lambda p: PlyHeader.parse_file(p, filesystem), paths
+    ``_Layout.output``)."""
+    return _transcode(
+        spark, _Ply(element, element_only, project, compute), src, out_dir,
+        where, target_bytes, filesystem, ansi, manifest, tiled=True, names=names,
     )
-    little, props = _ply_uniform(paths, headers, element, element_only)
-    out_props = _computed_props(props, compute)
-    if project is not None:
-        by_name = dict(props)
-        pairs = normalize_project(project)
-        missing = [s for _, s in pairs if s not in by_name]
-        if missing:
-            raise ValueError(
-                f"projected properties {missing} not in the source layout"
-            )
-        oc_by_name = dict(compute) if compute else {}
-        out_props = [
-            (o, oc_by_name[o][1] if o in oc_by_name else by_name[s])
-            for o, s in pairs
-        ]
-    if names is None:
-        bases = [os.path.splitext(os.path.basename(p))[0] for p in paths]
-        dup = {b for b in bases if bases.count(b) > 1}
-        names = {
-            fid: (f"{b}-fid{fid}.ply" if b in dup else f"{b}.ply")
-            for fid, b in enumerate(bases)
-        }
-    fsio.makedirs(out_dir, filesystem)
-    part_dir = out_dir.rstrip("/") + f"/.parts-{uuid.uuid4().hex[:8]}"
-    fsio.makedirs(part_dir, filesystem)
-    try:
-        stats, stat_fields = _ply_scan_stats(
-            spark, paths, headers, element, little, props, where,
-            target_bytes, filesystem, part_dir, project=project,
-            compute=compute, ansi=ansi,
-        )
-        by_fid: dict[int, list] = {}
-        for r in stats:
-            by_fid.setdefault(r["fid"], []).append(r)
-        jobs = [
-            (
-                out_dir.rstrip("/") + "/" + names[fid],
-                rows,
-                element,
-                little,
-                out_props,
-                filesystem,
-            )
-            for fid, rows in sorted(by_fid.items())
-            if any(r["m"] for r in rows)
-        ]
-        pmap_merges(_merge_ply_stats, jobs)
-        if manifest:
-            _emit_transcode_sidecar(
-                out_dir, stat_fields,
-                [(j[0], j[1]) for j in jobs], filesystem,
-            )
-    finally:
-        fsio.rmtree(part_dir, filesystem)
-    return {
-        "points": sum(r["m"] for r in stats),
-        "read": sum(r["read_n"] for r in stats),
-        "files": len(paths),
-        "outputs": len(jobs),
-    }
-
-
-#: LAS numpy char → PLY property char for pass-through columns
-_LAS2PLY_TYPES = {
-    "i1": "i1", "u1": "u1", "i2": "i2", "u2": "u2",
-    "i4": "i4", "u4": "u4", "i8": "i8", "u8": "u8",
-    "f4": "f4", "f8": "f8",
-}
 
 
 def transcode_las_to_ply(
@@ -1125,174 +884,12 @@ def transcode_las_to_ply(
     may differ in scale/offset (each file converts through its own grid);
     only the point format + ExtraBytes layout must match.
     """
-    from .ply_format import PlyElement, PlyHeader, PlyProperty
-
-    paths = _resolve_paths(src, ".las", filesystem)
-    if not paths:
-        raise FileNotFoundError(f"no .las files match {src!r}")
-    headers = pmap_headers(
-        lambda p: LasHeader.parse_file(p, filesystem), paths
-    )
-    sig0 = None
-    for p, h in zip(paths, headers):
-        sig = (
-            h.pdr_format,
-            h.stride,
-            tuple((e.name, e.np_char) for e in h.extra_fields),
-        )
-        if sig0 is None:
-            sig0 = sig
-        elif sig != sig0:
-            raise ValueError(
-                f"transcode_las_to_ply requires one point layout; {p} has"
-                f" (format, stride, extras)={sig} vs {paths[0]}: {sig0}"
-            )
-    h0 = headers[0]
-    stride = h0.stride
-    point_fields = h0.point_fields
-    known = {n for n, _ in point_fields}
     if columns is None:
         columns = ["x", "y", "z", "intensity", "classification"]
-    for c in columns:
-        if c not in known:
-            raise ValueError(f"unknown column {c!r}; have {sorted(known)}")
-    if where:
-        for name, op, _ in where:
-            if name not in known:
-                raise ValueError(f"unknown field {name!r}; have {sorted(known)}")
-            if op not in _OPS:
-                raise ValueError(f"unknown op {op!r}; have {sorted(_OPS)}")
-    las_np = dict(point_fields)
-    out_props = []
-    for c in columns:
-        ch = "f8" if c in ("x", "y", "z") else _LAS2PLY_TYPES[las_np[c]]
-        out_props.append((c, ch))
-
-    from .binary_section import plan_record_ranges
-
-    specs = []
-    for fid, (p, h) in enumerate(zip(paths, headers)):
-        sx, sy, sz = h.scale
-        ox, oy, oz = h.offset
-        for start, n in plan_record_ranges(h.pdr_nb, stride, target_bytes):
-            specs.append(
-                (fid, p, h.offset_to_points, start, n, sx, sy, sz, ox, oy, oz)
-            )
-    part_dir = out_path + f".parts-{uuid.uuid4().hex[:8]}"
-    fsio.makedirs(part_dir, filesystem)
-
-    rec_dtype_spec = [(n, "<" + c) for n, c in point_fields]
-    out_dtype_spec = [(n, "<" + c) for n, c in out_props]
-    where_local = list(where) if where else []
-    cols_local = list(columns)
-    fs = filesystem
-
-    def _work(iterator):
-        import pandas as pd
-
-        rec_dtype = np.dtype(rec_dtype_spec)
-        out_dtype = np.dtype(out_dtype_spec)
-        for pdf in iterator:
-            out_rows = []
-            for row in pdf.itertuples(index=False):
-                fid, path, off = int(row.fid), row.path, int(row.offset)
-                start, n = int(row.rec_start), int(row.n)
-                scale = (row.sx, row.sy, row.sz)
-                origin = (row.ox, row.oy, row.oz)
-                with fsio.open_input(path, fs) as f:
-                    f.seek(off + start * stride)
-                    buf = f.read(n * stride)
-                arr = np.frombuffer(buf, dtype=rec_dtype, count=n)
-
-                def world(name):
-                    ax = "xyz".index(name)
-                    return origin[ax] + scale[ax] * arr[name].astype(np.float64)
-
-                if where_local:
-                    mask = np.ones(n, dtype=bool)
-                    for name, op, val in where_local:
-                        col = world(name) if name in ("x", "y", "z") else arr[name]
-                        mask &= _OPS[op](col, val)
-                else:
-                    mask = slice(None)
-                out = np.empty(
-                    int(mask.sum()) if where_local else n, dtype=out_dtype
-                )
-                for c in cols_local:
-                    src_col = world(c) if c in ("x", "y", "z") else arr[c]
-                    out[c] = src_col[mask]
-                m = len(out)
-                dmin = [""] * len(stat_fields_local)
-                dmax = [""] * len(stat_fields_local)
-                if m:
-                    from .automanifest import column_bounds
-
-                    for i, (nm, ch) in enumerate(stat_fields_local):
-                        b = column_bounds(out[nm], ch)
-                        if b is not None:
-                            dmin[i], dmax[i] = repr(b[0]), repr(b[1])
-                part = ""
-                if m:
-                    part = (
-                        f"{part_dir}/p-{fid}-{start}-{uuid.uuid4().hex[:8]}.bin"
-                    )
-                    with fsio.open_output(part, fs) as f:
-                        f.write(out.tobytes())
-                out_rows.append(
-                    {
-                        "fid": fid,
-                        "rec_start": start,
-                        "part": part,
-                        "m": m,
-                        "read_n": n,
-                        "dmin": dmin,
-                        "dmax": dmax,
-                    }
-                )
-            yield pd.DataFrame(out_rows)
-
-    stat_fields_local = list(out_props)
-    spec_df = _spec_frame(
-        spark,
-        specs,
-        "fid int, path string, offset long, rec_start long, n long,"
-        " sx double, sy double, sz double, ox double, oy double, oz double",
+    return _transcode(
+        spark, _LasToPly(columns), src, out_path, where, target_bytes,
+        filesystem, False, manifest,
     )
-    stats_schema = (
-        "fid int, rec_start long, part string, m long, read_n long,"
-        " dmin array<string>, dmax array<string>"
-    )
-    try:
-        stats = spec_df.mapInPandas(_work, stats_schema).collect()
-        stats.sort(key=lambda r: (r["fid"], r["rec_start"]))
-        total = sum(r["m"] for r in stats)
-        live = [r for r in stats if r["m"]]
-        header = PlyHeader(
-            location=out_path,
-            little_endian=True,
-            elements=[
-                PlyElement(
-                    "vertex", total, [PlyProperty(n, c) for n, c in out_props]
-                )
-            ],
-        )
-        with fsio.open_output(out_path, filesystem) as out:
-            out.write(header.to_bytes())
-            for r in live:
-                append_file(out, r["part"], filesystem)
-        if manifest:
-            _emit_transcode_sidecar(
-                os.path.dirname(out_path) or ".", out_props,
-                [(out_path, stats)], filesystem,
-            )
-    finally:
-        fsio.rmtree(part_dir, filesystem)
-    return {
-        "points": total,
-        "read": sum(r["read_n"] for r in stats),
-        "files": len(paths),
-        "parts": len(live),
-    }
 
 
 def transcode_pcd(
@@ -1318,238 +915,13 @@ def transcode_pcd(
     through the general ``df.write.format("pcd")`` path.
     ``compute``/``ansi`` (round 12): recompute named fields with exprprog
     programs, each taking its program's storage type (see
-    ``_ply_scan_stats``).
+    ``_Layout.output``).
     Returns ``{"points": kept, "read": total, "files": n, "parts": n}``.
     """
-    from .pcd_format import PcdHeader
-
-    paths = _resolve_paths(src, ".pcd", filesystem)
-    if not paths:
-        raise FileNotFoundError(f"no .pcd files match {src!r}")
-    headers = pmap_headers(
-        lambda p: PcdHeader.parse_file(p, filesystem), paths
+    return _transcode(
+        spark, _Pcd(compute=compute), src, out_path, where, target_bytes,
+        filesystem, ansi, manifest,
     )
-    sigs = []
-    for p, h in zip(paths, headers):
-        if h.data_kind != "binary":
-            raise ValueError(
-                f"transcode_pcd requires DATA binary; {p} is"
-                f" {h.data_kind!r} — use df.write.format('pcd')"
-            )
-        sigs.append(tuple((f.name, f.np_char) for f in h.fields))
-    if len(set(sigs)) > 1:
-        raise ValueError(
-            f"transcode_pcd requires a uniform layout; got {set(sigs)} —"
-            " use df.write.format('pcd') for heterogeneous inputs"
-        )
-    props = sigs[0]
-    part_dir = out_path + f".parts-{uuid.uuid4().hex[:8]}"
-    fsio.makedirs(part_dir, filesystem)
-    try:
-        stats, stat_fields = _pcd_scan_stats(
-            spark, paths, headers, props, where, target_bytes, filesystem,
-            part_dir, compute=compute, ansi=ansi,
-        )
-        total = _merge_pcd_stats(
-            out_path, stats, headers[0], filesystem,
-            out_fields=_computed_props(props, compute) if compute else None,
-        )
-        if manifest:
-            _emit_transcode_sidecar(
-                os.path.dirname(out_path) or ".", stat_fields,
-                [(out_path, stats)], filesystem,
-            )
-    finally:
-        fsio.rmtree(part_dir, filesystem)
-    return {
-        "points": total,
-        "read": sum(r["read_n"] for r in stats),
-        "files": len(paths),
-        "parts": sum(1 for r in stats if r["m"]),
-    }
-
-
-def _pcd_scan_stats(
-    spark: SparkSession,
-    paths: list[str],
-    headers: list,
-    props,
-    where,
-    target_bytes: int,
-    filesystem,
-    part_dir: str,
-    project: list[str] | None = None,
-    compute: dict | None = None,
-    ansi: bool = False,
-) -> list:
-    """Shared scan stage of the fused PCD byte path (the PCD twin of
-    ``_ply_scan_stats``, including its ``project`` re-encode and the
-    round-12 ``compute`` replay — see there for the contract)."""
-    stride = headers[0].stride
-    if where:
-        known = {n for n, _ in props}
-        for name, op, _ in where:
-            if name not in known:
-                raise ValueError(f"unknown field {name!r}; have {sorted(known)}")
-            if op not in _OPS:
-                raise ValueError(f"unknown op {op!r}; have {sorted(_OPS)}")
-    if compute and project is None:
-        project = [n for n, _ in props]  # computed-only → identity layout
-    out_dtype_spec = copy_pairs = None
-    if project is not None:
-        by_name = dict(props)
-        copy_pairs = normalize_project(project)
-        missing = [s for _, s in copy_pairs if s not in by_name]
-        if missing:
-            raise ValueError(
-                f"projected fields {missing} not in the source layout"
-            )
-        if compute:
-            outs = {o for o, _ in copy_pairs}
-            bad = sorted(set(compute) - outs)
-            if bad:
-                raise ValueError(
-                    f"computed fields {bad} not among the output fields"
-                    f" {sorted(outs)}"
-                )
-        out_dtype_spec = [
-            (
-                o,
-                "<"
-                + (
-                    compute[o][1]
-                    if compute and o in compute
-                    else by_name[s]
-                ),
-            )
-            for o, s in copy_pairs
-        ]
-
-    from .binary_section import plan_record_ranges
-
-    specs = []
-    for fid, (p, h) in enumerate(zip(paths, headers)):
-        for start, n in plan_record_ranges(h.points, stride, target_bytes):
-            specs.append((fid, p, h.data_offset, start, n))
-
-    rec_dtype_spec = [(n, "<" + c) for n, c in props]
-    where_local = list(where) if where else []
-    compute_local = dict(compute) if compute else {}
-    ansi_local = bool(ansi)
-    if out_dtype_spec is not None:
-        stat_fields = [(o, s[1:]) for o, s in out_dtype_spec]
-    else:
-        stat_fields = list(props)
-    stat_fields_local = list(stat_fields)
-    fs = filesystem
-
-    def _work(iterator):
-        import pandas as pd
-
-        from .automanifest import column_bounds
-        from .exprprog import eval_program_typed
-
-        rec_dtype = np.dtype(rec_dtype_spec)
-        for pdf in iterator:
-            out_rows = []
-            for fid, path, off, start, n in zip(
-                pdf["fid"], pdf["path"], pdf["offset"], pdf["rec_start"], pdf["n"]
-            ):
-                fid, off, start, n = int(fid), int(off), int(start), int(n)
-                with fsio.open_input(path, fs) as f:
-                    f.seek(off + start * stride)
-                    buf = f.read(n * stride)
-                raw = np.frombuffer(buf, dtype=np.uint8).reshape(n, stride)
-                arr = np.frombuffer(buf, dtype=rec_dtype, count=n)
-                if where_local:
-                    mask = np.ones(n, dtype=bool)
-                    for name, op, val in where_local:
-                        mask &= _OPS[op](arr[name], val)
-                    kept, kept_raw = arr[mask], raw[mask]
-                else:
-                    kept, kept_raw = arr, raw
-                if out_dtype_spec is not None:
-                    enc = np.zeros(len(kept), dtype=np.dtype(out_dtype_spec))
-                    for out_nm, src_nm in copy_pairs:
-                        if out_nm in compute_local:
-                            # computed properties replay over the SOURCE
-                            # value (the general sink's Project also reads
-                            # pre-projection attributes)
-                            prg, oc = compute_local[out_nm]
-                            enc[out_nm] = eval_program_typed(
-                                prg, kept, oc, ansi_local
-                            )
-                        else:
-                            enc[out_nm] = kept[src_nm]
-                    kept_raw = enc
-                    stat_rec = enc
-                else:
-                    stat_rec = kept
-                m = len(kept_raw)
-                dmin = [""] * len(stat_fields_local)
-                dmax = [""] * len(stat_fields_local)
-                if m:
-                    for i, (nm, ch) in enumerate(stat_fields_local):
-                        b = column_bounds(stat_rec[nm], ch)
-                        if b is not None:
-                            dmin[i], dmax[i] = repr(b[0]), repr(b[1])
-                part = ""
-                if m:
-                    part = (
-                        f"{part_dir}/p-{fid}-{start}-{uuid.uuid4().hex[:8]}.bin"
-                    )
-                    with fsio.open_output(part, fs) as f:
-                        f.write(kept_raw.tobytes())
-                out_rows.append(
-                    {
-                        "fid": fid,
-                        "rec_start": start,
-                        "part": part,
-                        "m": m,
-                        "read_n": n,
-                        "dmin": dmin,
-                        "dmax": dmax,
-                    }
-                )
-            yield pd.DataFrame(out_rows)
-
-    spec_df = _spec_frame(spark, specs, "fid int, path string, offset long, rec_start long, n long")
-    stats_schema = (
-        "fid int, rec_start long, part string, m long, read_n long,"
-        " dmin array<string>, dmax array<string>"
-    )
-    stats = spec_df.mapInPandas(_work, stats_schema).collect()
-    stats.sort(key=lambda r: (r["fid"], r["rec_start"]))
-    return stats, stat_fields
-
-
-def _merge_pcd_stats(out_path: str, stats: list, h0, filesystem=None, out_fields=None) -> int:
-    """Commit one ``.pcd`` from scan-stage stats rows.  ``out_fields``
-    (``[(name, np_char)]``) overrides the header layout for projected
-    re-encodes; default is the source's own fields."""
-    import dataclasses as _dc
-
-    from .pcd_format import PcdField, PcdHeader
-
-    total = sum(r["m"] for r in stats)
-    live = [r for r in stats if r["m"]]
-    fields = (
-        [PcdField(n, c) for n, c in out_fields]
-        if out_fields is not None
-        else [_dc.replace(f) for f in h0.fields]
-    )
-    header = PcdHeader(
-        location=out_path,
-        fields=fields,
-        width=total,
-        points=total,
-        data_kind="binary",
-    )
-    with fsio.open_output(out_path, filesystem) as out:
-        out.write(header.to_bytes())
-        for r in live:
-            append_file(out, r["part"], filesystem)
-    return total
 
 
 def transcode_pcd_tiled(
@@ -1572,80 +944,8 @@ def transcode_pcd_tiled(
     preserved) — the ``select(subset) → write`` shape.
     ``compute``/``ansi`` (round 12) recompute named output fields with
     exprprog programs, each taking its program's storage type (see
-    ``_ply_scan_stats``)."""
-    from .pcd_format import PcdHeader
-    from .pointcloud_common import pmap_merges
-
-    paths = _resolve_paths(src, ".pcd", filesystem)
-    if not paths:
-        raise FileNotFoundError(f"no .pcd files match {src!r}")
-    headers = pmap_headers(
-        lambda p: PcdHeader.parse_file(p, filesystem), paths
+    ``_Layout.output``)."""
+    return _transcode(
+        spark, _Pcd(project, compute), src, out_dir, where, target_bytes,
+        filesystem, ansi, manifest, tiled=True, names=names,
     )
-    sigs = []
-    for p, h in zip(paths, headers):
-        if h.data_kind != "binary":
-            raise ValueError(
-                f"transcode_pcd requires DATA binary; {p} is"
-                f" {h.data_kind!r} — use df.write.format('pcd')"
-            )
-        sigs.append(tuple((f.name, f.np_char) for f in h.fields))
-    if len(set(sigs)) > 1:
-        raise ValueError(
-            f"transcode_pcd requires a uniform layout; got {set(sigs)} —"
-            " use df.write.format('pcd') for heterogeneous inputs"
-        )
-    props = sigs[0]
-    if names is None:
-        bases = [os.path.splitext(os.path.basename(p))[0] for p in paths]
-        dup = {b for b in bases if bases.count(b) > 1}
-        names = {
-            fid: (f"{b}-fid{fid}.pcd" if b in dup else f"{b}.pcd")
-            for fid, b in enumerate(bases)
-        }
-    fsio.makedirs(out_dir, filesystem)
-    part_dir = out_dir.rstrip("/") + f"/.parts-{uuid.uuid4().hex[:8]}"
-    fsio.makedirs(part_dir, filesystem)
-    try:
-        stats, stat_fields = _pcd_scan_stats(
-            spark, paths, headers, props, where, target_bytes, filesystem,
-            part_dir, project=project, compute=compute, ansi=ansi,
-        )
-        out_fields = None
-        if project is not None:
-            by_name = dict(props)
-            oc_by_name = dict(compute) if compute else {}
-            out_fields = [
-                (o, oc_by_name[o][1] if o in oc_by_name else by_name[s])
-                for o, s in normalize_project(project)
-            ]
-        elif compute:
-            out_fields = _computed_props(props, compute)
-        by_fid: dict[int, list] = {}
-        for r in stats:
-            by_fid.setdefault(r["fid"], []).append(r)
-        jobs = [
-            (
-                out_dir.rstrip("/") + "/" + names[fid],
-                rows,
-                headers[fid],
-                filesystem,
-                out_fields,
-            )
-            for fid, rows in sorted(by_fid.items())
-            if any(r["m"] for r in rows)
-        ]
-        pmap_merges(_merge_pcd_stats, jobs)
-        if manifest:
-            _emit_transcode_sidecar(
-                out_dir, stat_fields,
-                [(j[0], j[1]) for j in jobs], filesystem,
-            )
-    finally:
-        fsio.rmtree(part_dir, filesystem)
-    return {
-        "points": sum(r["m"] for r in stats),
-        "read": sum(r["read_n"] for r in stats),
-        "files": len(paths),
-        "outputs": len(jobs),
-    }

@@ -12,7 +12,7 @@ import os
 import pytest
 from pyarrow import fs as pafs
 
-from .fixtures import make_las, make_ply_xyz
+from .fixtures import make_las, make_pcd, make_ply_xyz
 from spark_iqmulus_spark.sources import fsio
 from spark_iqmulus_spark.sources.pointcloud_common import append_file
 
@@ -101,32 +101,43 @@ def test_parse_file_through_fs(tmp_path, subfs):
 # -- transcode through a filesystem: byte-identical output -------------------
 
 
-def test_transcode_las_through_fs_byte_identical(spark, tmp_path, subfs):
-    from spark_iqmulus_spark.sources.transcode import transcode_las
+@pytest.mark.parametrize("tiled", [False, True], ids=["merged", "tiled"])
+@pytest.mark.parametrize("fmt", ["las", "ply", "pcd"])
+def test_transcode_las_through_fs_byte_identical(spark, tmp_path, subfs, fmt, tiled):
+    """Every transcoder routes source reads, worker part writes and the
+    commit through ``filesystem=`` and writes the same bytes as the local
+    sendfile path."""
+    from spark_iqmulus_spark.sources import transcode as tc
 
-    for i, seed in enumerate((1, 2)):
-        make_las(str(tmp_path / f"tile{i}.las"), n=2000, fmt=1, seed=seed)
-    where = [("intensity", ">", 100)]
-    r_local = transcode_las(
-        spark,
-        [str(tmp_path / "tile0.las"), str(tmp_path / "tile1.las")],
-        str(tmp_path / "local.las"),
+    make, where = {
+        "las": (make_las, [("intensity", ">", 100)]),
+        "ply": (make_ply_xyz, [("x", "<", 60.0)]),
+        "pcd": (make_pcd, [("label", "<=", 5)]),
+    }[fmt]
+    srcs = [f"tile{i}.{fmt}" for i in (0, 1)]
+    for i, name in enumerate(srcs):
+        make(str(tmp_path / name), n=2000, seed=i + 1)
+    run = getattr(tc, f"transcode_{fmt}" + ("_tiled" if tiled else ""))
+    out = "out" if tiled else f"out.{fmt}"
+    r_local = run(
+        spark, [str(tmp_path / n) for n in srcs], str(tmp_path / "local" / out),
         where=where,
     )
     # same sources read THROUGH the filesystem, parts + commit fs-routed
-    r_fs = transcode_las(
-        spark,
-        ["tile0.las", "tile1.las"],
-        "fsout.las",
-        where=where,
-        filesystem=subfs,
-    )
+    r_fs = run(spark, srcs, f"fs/{out}", where=where, filesystem=subfs)
     assert r_fs == r_local
-    assert (tmp_path / "fsout.las").read_bytes() == (
-        tmp_path / "local.las"
-    ).read_bytes()
-    # part dir cleaned up in both regimes
-    assert not [p for p in os.listdir(tmp_path) if ".parts-" in p]
+    local, remote = tmp_path / "local" / out, tmp_path / "fs" / out
+    if tiled:
+        names = sorted(f for f in os.listdir(local) if f.endswith(fmt))
+        assert names == srcs
+        assert sorted(f for f in os.listdir(remote) if f.endswith(fmt)) == names
+        pairs = [(local / n, remote / n) for n in names]
+    else:
+        pairs = [(local, remote)]
+    for a, b in pairs:
+        assert a.read_bytes() == b.read_bytes()
+    # part dirs cleaned up in both regimes
+    assert not [d for d, _, _ in os.walk(tmp_path) if ".parts-" in d]
 
 
 def test_transcode_dir_listing_through_fs(spark, tmp_path, subfs):

@@ -1476,3 +1476,40 @@ def test_floor_over_unreplayable_child_falls_back(spark, tiles, tmp_path):
         is None
     )
     assert "replay" in (fw._LAST_DECLINE or "")
+
+
+def test_fid_restore_names_never_collide(spark, tmp_path):
+    """Sources ``d1/a``, ``d2/a`` and ``d3/a-fid1`` used to restore fid 1
+    AND fid 2 as ``a-fid1.las``: two merges wrote one file at once and
+    points were lost.  The shared naming rule keeps every output distinct,
+    and the fused transcoder, the fused write, the general sink and
+    ``save_partitioned_by_fid`` name their outputs identically."""
+    import json
+
+    from spark_iqmulus_spark.sources import fused_write as fw
+    from spark_iqmulus_spark.sources.save import save_partitioned_by_fid
+    from spark_iqmulus_spark.sources.transcode import transcode_las_tiled
+
+    paths = []
+    for d, name, n in (("d1", "a", 1000), ("d2", "a", 2000), ("d3", "a-fid1", 3000)):
+        (tmp_path / d).mkdir()
+        paths.append(str(tmp_path / d / f"{name}.las"))
+        make_las(paths[-1], n=n, fmt=1, seed=n)
+    out_t = str(tmp_path / "tiled")
+    r = transcode_las_tiled(spark, paths, out_t)
+    assert (r["points"], r["outputs"]) == (6000, 3)
+
+    df = spark.read.format("las").option("paths", json.dumps(paths)).load()
+    outg, outf = str(tmp_path / "general"), str(tmp_path / "fused")
+    df.write.format("las").mode("overwrite").option("fusedWrite", "false").save(outg)
+    df.write.format("las").mode("overwrite").save(outf)
+    assert fw._LAST_DECLINE is None  # the fused path ran
+    want = ["a-fid0.las", "a-fid1-fid2.las", "a-fid1.las"]
+    for out in (out_t, outg, outf):
+        assert _names(out) == want
+        assert spark.read.format("las").load(out).count() == 6000
+    assert _rows(spark, outg) == _rows(spark, outf) == _rows(spark, out_t)
+    # the save helper reports the names the writer restored
+    written = save_partitioned_by_fid(df, str(tmp_path / "saved"))
+    assert sorted(os.path.basename(p) for p in written) == want
+    assert all(os.path.exists(p) for p in written)

@@ -629,3 +629,28 @@ def test_spec_frame_one_task_per_spec_no_shuffle(spark):
     assert "Exchange" not in plan
     got = sorted(tuple(r) for r in df.collect())
     assert got == sorted(specs)
+
+
+def test_sidecar_failure_is_logged_and_transcode_commits(
+    spark, las_tiles, tmp_path, monkeypatch, caplog
+):
+    """The ``_manifest`` sidecar is advisory: a failing write is logged as
+    a warning with its traceback, and the transcode still commits."""
+    import logging
+
+    from spark_iqmulus_spark.sources import automanifest
+
+    def fail(*args, **kwargs):
+        raise OSError("sidecar store unavailable")
+
+    monkeypatch.setattr(automanifest, "write_sidecar", fail)
+    out = str(tmp_path / "merged.las")
+    with caplog.at_level(logging.WARNING, logger="spark_iqmulus_spark"):
+        r = transcode_las(spark, las_tiles, out)
+    assert r["points"] == 15000
+    assert LasHeader.parse_file(out).pdr_nb == 15000
+    assert spark.read.format("las").load(out).count() == 15000
+    assert not os.path.exists(str(tmp_path / "_manifest"))
+    [rec] = [r for r in caplog.records if "_manifest" in r.getMessage()]
+    assert rec.levelno == logging.WARNING
+    assert str(rec.exc_info[1]) == "sidecar store unavailable"
