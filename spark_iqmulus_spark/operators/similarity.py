@@ -262,32 +262,23 @@ def lsh_signatures(vectors: DataFrame, dim: int) -> DataFrame:
     in IEEE 754; same left-to-right order, same ``lit(0.0)`` start), but
     whole-stage-codegen'd instead of interpreted per element — the
     signature pass drops from 1.55 s to ~0.1 s at sf0.1.  Dims above
-    ``_FLAT_DIM_CAP`` keep the fold (expression-tree size)."""
-    planes = _hyperplanes(dim)
-    sig = None
-    for j, plane in enumerate(planes):
+    ``_FLAT_DIM_CAP`` keep the fold (expression-tree size).
+
+    The whole 16-bit sum is ONE SQL string parsed in one py4j round-trip
+    (the :func:`_dot` rule).  Building it from ``Column`` operators took 16
+    parses plus ~80 py4j calls: 0.18–0.21 s per call vs 0.10–0.11 s now
+    (64 dims), for the same optimized plan and the same signatures."""
+    bits = []
+    for j, plane in enumerate(_hyperplanes(dim)):
         if dim <= _FLAT_DIM_CAP:
-            proj = F.expr(
-                "0.0D"
-                + "".join(
-                    (" + " if h > 0 else " - ")
-                    + f"CAST(get(embedding, {i}) AS DOUBLE)"
-                    for i, h in enumerate(plane)
-                )
+            proj = "0.0D" + "".join(
+                (" + " if h > 0 else " - ") + f"CAST(get(embedding, {i}) AS DOUBLE)"
+                for i, h in enumerate(plane)
             )
         else:
-            proj = F.aggregate(
-                F.zip_with(
-                    F.col("embedding"),
-                    F.array(*[F.lit(v) for v in plane]),
-                    lambda x, h: x.cast("double") * h,
-                ),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-        bit = F.when(proj >= 0, F.shiftleft(F.lit(1), j)).otherwise(F.lit(0))
-        sig = bit if sig is None else sig + bit
-    return vectors.select("vec_id", "embedding", sig.alias("sig"))
+            proj = _fold_dot_sql("embedding", _lit_arr_sql(plane))
+        bits.append(f"CASE WHEN ({proj}) >= 0 THEN shiftleft(1, {j}) ELSE 0 END")
+    return vectors.select("vec_id", "embedding", F.expr(" + ".join(bits)).alias("sig"))
 
 
 def q_sim_knn_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:

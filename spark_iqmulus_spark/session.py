@@ -32,6 +32,17 @@ TABLES = (
 #: still < 1 MB, so a broadcast join is always the right physical plan).
 BROADCAST_DIMS = ("region", "nation")
 
+#: ``spark.sql.codegen.cache.maxEntries``: Spark's cache of compiled
+#: generated classes (default 100).  One pass over all 234 registry keys at
+#: sf0.01 compiles 2,540 distinct classes; at 100 entries a repeated mixed
+#: workload recompiles every class on every query (perfbench ``sql_mix``
+#: needs 140 per cycle).  The cache is a Guava LRU split into 4 segments that
+#: each evict at a quarter of the size, so 4,096 leaves each segment ~60%
+#: above its expected share of the 2,540.  A static conf, read once per JVM
+#: when code is first generated: it takes effect only if this builder starts
+#: the SparkContext and no other session generated code first.
+CODEGEN_CACHE_ENTRIES = 4096
+
 
 def get_spark(app_name: str = "spark_iqmulus_spark", cpus: int | None = None) -> SparkSession:
     """Build a local session tuned for the test harness.
@@ -62,6 +73,7 @@ def get_spark(app_name: str = "spark_iqmulus_spark", cpus: int | None = None) ->
         .config("spark.sql.python.filterPushdown.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .getOrCreate()
     )
 
@@ -137,12 +149,24 @@ def ts_micros_if_long(df: DataFrame, col: str = "ts") -> DataFrame:
     return df
 
 
-#: (session id, sf_dir) → loaded table dict.  DataFrames are immutable plan
+#: (session UUID, sf_dir) → loaded table dict.  DataFrames are immutable plan
 #: handles, so reuse is safe; the cache saves a parquet-footer read per table
-#: per query call (measurable across an 80-query correctness run).
-_TABLE_CACHE: dict[tuple[int, str], dict[str, DataFrame]] = {}
-#: session id → sf_dir whose tables currently back the temp views
-_VIEWS_FOR: dict[int, str] = {}
+#: per query call (measurable across an 80-query correctness run).  Keyed on
+#: the JVM session's UUID, which is never reused (an ``id()`` is, once its
+#: object is freed, and would return DataFrames bound to a dead session).
+#: A stopped session's tables are dropped at the next miss.
+_TABLE_CACHE: dict[tuple[str, str], dict[str, DataFrame]] = {}
+#: session UUID → sf_dir whose tables currently back the temp views
+_VIEWS_FOR: dict[str, str] = {}
+
+
+def _drop_stopped_sessions() -> None:
+    """Forget the tables of sessions whose SparkContext has stopped
+    (``SparkContext.stop`` clears ``_jsc``)."""
+    for key, tables in list(_TABLE_CACHE.items()):
+        if any(df.sparkSession.sparkContext._jsc is None for df in tables.values()):
+            del _TABLE_CACHE[key]
+            _VIEWS_FOR.pop(key[0], None)
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
@@ -155,7 +179,7 @@ def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     integer `div` keeps full precision (a double division would lose bits
     above 2^53).
     """
-    sid = id(spark._jsparkSession)
+    sid = spark._jsparkSession.sessionUUID()
     key = (sid, sf_dir)
     cached = _TABLE_CACHE.get(key)
     if cached is not None:
@@ -166,6 +190,7 @@ def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
                 df.createOrReplaceTempView(name)
             _VIEWS_FOR[sid] = sf_dir
         return cached
+    _drop_stopped_sessions()
     normalize_session(spark)
     out: dict[str, DataFrame] = {}
     for name in TABLES:

@@ -5,7 +5,10 @@ Usage: python tools/time_keys.py [--runs N] <key> [<key> ...]
 Each sample builds a FRESH DataFrame (matching how the bench and driver
 construct queries — plan/analysis cost included) and writes it to the
 noop sink so the computation, not the collect, is timed.  Prints one JSON
-line: {key: {"med": s, "min": s, "max": s, "runs": [..]}}.
+line: {key: {"med": s, "min": s, "max": s, "runs": [..], "compiles": [..],
+"compile_s": [..]}}.  ``compiles``/``compile_s`` are the generated classes
+Janino compiled during each sample and their compile time: nonzero on a
+repeated sample means Spark's codegen cache is evicting the key's classes.
 """
 
 from __future__ import annotations
@@ -36,21 +39,27 @@ def main() -> int:
     spark = get_spark("time_keys")
     spark.sparkContext.setLogLevel("ERROR")
     register_sources(spark)
+    codegen = spark._jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
     out = {}
     # one warm-up of the first key so JVM/session warm-up is not billed
     qs[keys[0]](spark, SF_DIR).write.format("noop").mode("overwrite").save()
     for key in keys:
-        samples = []
+        samples, n_compiled, compile_s = [], [], []
         for i in range(runs):
             spark.sparkContext.setJobDescription(f"time:{key}#{i}")
-            t0 = time.time()
+            n0, ns0, t0 = compiles().getCount(), codegen.compileTime(), time.time()
             qs[key](spark, SF_DIR).write.format("noop").mode("overwrite").save()
             samples.append(round(time.time() - t0, 3))
+            n_compiled.append(compiles().getCount() - n0)
+            compile_s.append(round((codegen.compileTime() - ns0) / 1e9, 3))
         out[key] = {
             "med": round(statistics.median(samples), 3),
             "min": min(samples),
             "max": max(samples),
             "runs": samples,
+            "compiles": n_compiled,
+            "compile_s": compile_s,
         }
         print(json.dumps({key: out[key]}), flush=True)
     print(json.dumps(out))
