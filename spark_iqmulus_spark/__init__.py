@@ -30,9 +30,14 @@ __version__ = "0.1.0"
 
 from . import compat as _compat
 
-# Every Spark Python worker imports this package (cloudpickle resolves the
-# DataSources, readers and operator UDFs by reference), so this is where the
-# workers' per-round-trip zip re-parse is removed; the driver is untouched.
+# The zip-directory memo has two install points.  Task workers inherit it
+# from the daemon that forks them (``_daemon``, set by ``get_spark``), since
+# some never import this package: the Python RDD workers behind
+# ``createDataFrame`` over local rows or an RDD, e.g. ``transcode._spec_frame``.
+# Planner workers (``create_data_source``, ``plan_data_source_read``,
+# ``write_into_data_source``, ``commit_data_source_write``) run under the
+# stock ``pyspark.daemon`` and get it here, when they unpickle our
+# DataSource.  The driver is untouched.
 if _compat.in_spark_worker():
     _compat.memoize_zip_directories()
 

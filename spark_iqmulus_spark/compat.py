@@ -9,7 +9,23 @@ PySpark's ``transformWithStateInPandas`` state-server protocol
 protobuf.
 
 ``memoize_zip_directories`` removes a fixed ~0.2 s from every Spark Python
-worker round trip on CPython < 3.12 (see its docstring).
+worker round trip on CPython < 3.12 (see its docstring).  It is installed
+at two points:
+
+- task workers inherit it from the daemon that forks them,
+  ``spark_iqmulus_spark._daemon``, which ``get_spark`` names in
+  ``spark.python.daemon.module``.  This covers the task workers that never
+  import the package, such as the Python RDD workers behind
+  ``createDataFrame`` over local rows or an RDD (``transcode._spec_frame``);
+- planner workers (``create_data_source``, ``plan_data_source_read``,
+  ``write_into_data_source``, ``commit_data_source_write``) run under the
+  stock ``pyspark.daemon`` whatever that conf says, and install it when
+  they import the package to unpickle its DataSource
+  (:func:`in_spark_worker`).
+
+The daemon conf is read when the SparkContext starts, so a session the
+package did not build keeps the stock daemon: its task workers get the memo
+only from a package import, and never for their first call.
 """
 
 from __future__ import annotations
@@ -100,9 +116,18 @@ def ensure_protobuf_on_workers(spark) -> bool:
 
 def in_spark_worker() -> bool:
     """True in a Spark-launched Python worker process: a task or planner
-    worker forked by a daemon (``__main__`` is ``pyspark.daemon``), or a
-    worker started directly as a ``pyspark.*worker*`` module (e.g.
+    worker forked by the stock daemon (``__main__`` is ``pyspark.daemon``),
+    or a worker started directly as a ``pyspark.*worker*`` module (e.g.
     ``pyspark.sql.worker.plan_data_source_read`` when no daemon is used).
+
+    The package ``__init__`` installs the memo when this holds.  That is
+    the install point of the planner workers, which always run under the
+    stock daemon.  Task workers of a ``get_spark`` session are forked by
+    ``spark_iqmulus_spark._daemon`` (False here), which installed the memo
+    before forking.  A worker runs ``setup_spark_files`` before it reads
+    its command, so a package import covers only the worker's later calls,
+    and a worker whose commands never import the package (the Python RDD
+    workers behind ``createDataFrame``) is never covered by it.
     """
     spec = getattr(sys.modules.get("__main__"), "__spec__", None)
     name = getattr(spec, "name", None) or ""

@@ -74,6 +74,9 @@ def get_spark(app_name: str = "spark_iqmulus_spark", cpus: int | None = None) ->
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        # task workers inherit the zip-directory memo from this daemon
+        # (compat.py); read at SparkContext start, like the cache size above
+        .config("spark.python.daemon.module", "spark_iqmulus_spark._daemon")
         .getOrCreate()
     )
 

@@ -43,12 +43,15 @@ read carries ``.option("manifest", "false")`` or the session conf
 
 from __future__ import annotations
 
+import logging
 import math
 import os
 
 import numpy as np
 
 from . import fsio
+
+_log = logging.getLogger(__name__)
 
 #: sidecar directory name inside a write's output directory.  The leading
 #: underscore keeps Spark/Hadoop listings from treating it as data, and
@@ -250,7 +253,8 @@ def emit_from_commit(
     n_points)]``; ``bounds_lists`` is the parallel list of per-part dicts
     (a ``None`` part means that task opted out — skip the sidecar
     entirely rather than record partial stats).  Failures never fail the
-    commit: the sidecar is advisory (the fast path just stays cold)."""
+    commit: the sidecar is advisory (the fast path just stays cold), so a
+    failure is logged as a warning with its traceback."""
     if not dest_totals:
         return
     try:
@@ -269,14 +273,10 @@ def emit_from_commit(
                 }
             )
         write_sidecar(out_dir, fields, entries, filesystem)
-    except Exception:  # pragma: no cover - advisory sidecar only
-        import sys
-        import traceback
-
-        print(
-            "spark_iqmulus_spark: failed to write the _manifest sidecar"
-            f" under {out_dir}:\n{traceback.format_exc()}",
-            file=sys.stderr,
+    except Exception:
+        _log.warning(
+            "failed to write the _manifest sidecar under %s", out_dir,
+            exc_info=True,
         )
 
 

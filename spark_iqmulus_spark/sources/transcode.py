@@ -446,7 +446,13 @@ def _spec_frame(spark: SparkSession, specs: list, schema: str):
     previous ``createDataFrame(specs).repartition(n)`` achieved the same
     layout through a keyless round-robin repartition — an Exchange (plus
     its deterministic sort-before-repartition pass) paid on every
-    transcode job for a frame of a few dozen bytes per row."""
+    transcode job for a frame of a few dozen bytes per row.
+
+    The rows still pass through a Python RDD worker on each task
+    (``createDataFrame`` maps them through PySpark's own ``prepare`` and
+    re-pickles them) before ``mapInPandas``.  That worker never imports
+    this package, so it gets the zip-directory memo only from the package's
+    daemon (``compat``)."""
     return spark.createDataFrame(
         spark.sparkContext.parallelize(specs, max(1, len(specs))), schema
     )

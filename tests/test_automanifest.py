@@ -326,3 +326,43 @@ def test_fused_byte_path_write_emits_sidecar(spark, tmp_path):
     assert sorted(
         f for f in os.listdir(out2) if f.endswith(".las")
     ) == ["a.las", "b.las"]
+
+
+def test_sink_sidecar_failure_is_logged_and_las_commits(
+    spark, tmp_path, monkeypatch, caplog
+):
+    """The general LAS sink (``fusedWrite=false``) treats the ``_manifest``
+    sidecar as advisory: a failing sidecar write is logged as a warning
+    with its traceback, and the ``.las`` file still commits.  In a Spark
+    write the commit runs in a planner worker process, out of this
+    process's ``caplog`` and monkeypatch, so the test drives the sink's
+    own ``write``/``commit`` here."""
+    import logging
+
+    from spark_iqmulus_spark.sources import automanifest
+    from spark_iqmulus_spark.sources.las import LasDataSource
+    from spark_iqmulus_spark.sources.las_format import LasHeader
+
+    from .fixtures import make_las
+
+    def fail(*args, **kwargs):
+        raise OSError("sidecar store unavailable")
+
+    src = str(tmp_path / "src.las")
+    make_las(src, n=3000)
+    df = spark.read.format("las").load(src).drop("fid", "pid")
+    out = str(tmp_path / "out")
+    writer = LasDataSource({"path": out, "fusedWrite": "false"}).writer(
+        df.schema, True
+    )
+    monkeypatch.setattr(automanifest, "write_sidecar", fail)
+    with caplog.at_level(logging.WARNING, logger="spark_iqmulus_spark"):
+        writer.commit([writer.write(iter(df.toArrow().to_batches()))])
+    [las] = [f for f in os.listdir(out) if f.endswith(".las")]
+    assert LasHeader.parse_file(os.path.join(out, las)).pdr_nb == 3000
+    assert spark.read.format("las").load(out).count() == 3000
+    assert not os.path.exists(os.path.join(out, "_manifest"))
+    [rec] = [r for r in caplog.records if "_manifest" in r.getMessage()]
+    assert rec.levelno == logging.WARNING
+    assert rec.name == "spark_iqmulus_spark.sources.automanifest"
+    assert str(rec.exc_info[1]) == "sidecar store unavailable"

@@ -1,6 +1,7 @@
-"""The zip-directory memo that Spark Python workers install on import
-(``compat.memoize_zip_directories``), and the worker ``PYTHONPATH`` that
-``get_spark`` exports so the workers can import the package at all.
+"""The zip-directory memo (``compat.memoize_zip_directories``) that Spark
+Python workers get from the package's daemon (task workers) or on package
+import (planner workers), and the worker ``PYTHONPATH`` that ``get_spark``
+exports so the workers can import the package at all.
 
 The memo tests patch ``zipimport`` process-wide, so each runs in a
 subprocess and this pytest process stays unpatched.
@@ -206,3 +207,54 @@ def test_las_read_outside_repo_root(tmp_path):
         spark.stop()
     """, cwd=str(tmp_path), env=env, timeout=240)
     assert out.strip().splitlines()[-1] == "2000"
+
+
+def test_task_workers_inherit_memo_from_daemon():
+    """A fresh ``get_spark`` session's first Python job runs a UDF that
+    never imports the package: its task workers still have the memo,
+    installed by ``spark_iqmulus_spark._daemon`` before it forks them."""
+    env = dict(os.environ, SPARK_DRIVER_MEMORY="1g")
+    out = _run(f"""
+        import sys
+        sys.path.insert(0, {ROOT!r})
+        from spark_iqmulus_spark.session import get_spark
+
+        def probe(batches):
+            import zipimport
+            import pyarrow as pa
+            memo = hasattr(zipimport._read_directory, "__wrapped__")
+            for b in batches:
+                yield pa.RecordBatch.from_pydict({{"m": [memo] * b.num_rows}})
+
+        spark = get_spark("daemon_memo", cpus=2)
+        rows = spark.range(0, 8, 1, 8).mapInArrow(probe, "m boolean").collect()
+        print([r.m for r in rows])
+        spark.stop()
+    """, env=env, timeout=240)
+    assert out.strip().splitlines()[-1] == str([MEMO_EXPECTED] * 8)
+
+
+def test_daemon_module_imports_nothing_beyond_pyspark_daemon():
+    """Fork safety: importing the daemon module loads only what
+    ``pyspark.daemon`` loads plus the package, ``compat`` and
+    ``zipimport``, and starts no thread."""
+    probe = f"""
+        import sys
+        sys.path.insert(0, {ROOT!r})
+        before = set(sys.modules)
+        import {{}}
+        mods = sorted(set(sys.modules) - before)
+        import threading
+        print(threading.active_count(), *mods)
+    """
+
+    def loaded(module):
+        threads, *mods = _run(probe.format(module)).split()
+        assert threads == "1"
+        return set(mods)
+
+    extra = loaded("spark_iqmulus_spark._daemon") - loaded("pyspark.daemon")
+    assert extra <= {
+        "spark_iqmulus_spark", "spark_iqmulus_spark.compat",
+        "spark_iqmulus_spark._daemon", "zipimport",
+    }
