@@ -52,7 +52,6 @@ def __getattr__(name):
         "register_sources": ("spark_iqmulus_spark.sources", "register_sources"),
         "get_spark": ("spark_iqmulus_spark.session", "get_spark"),
         "load_tables": ("spark_iqmulus_spark.session", "load_tables"),
-        "smart_las": ("spark_iqmulus_spark.plans.header_catalog", "smart_las"),
         "las_headers": ("spark_iqmulus_spark.plans.header_catalog", "las_headers"),
         "ply_headers": ("spark_iqmulus_spark.plans.header_catalog", "ply_headers"),
         "pcd_headers": ("spark_iqmulus_spark.plans.header_catalog", "pcd_headers"),

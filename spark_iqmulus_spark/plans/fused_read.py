@@ -4,8 +4,7 @@ The reference registers two Catalyst strategies
 (``/root/reference/src/main/scala/fr/ign/spark/iqmulus/ExtraStrategies.scala:35-76``)
 so that stock ``df.count()`` and ``df.agg(min('x'), max('x'))`` over a LAS
 relation are answered from file headers — O(files) driver work, zero point
-bytes scanned.  ``smart_scan`` (plans/header_catalog.py) reproduced that as
-an opt-in facade; this module closes the gap transparently, using the same
+bytes scanned.  This module does the same transparently, using the same
 py4j optimized-plan inspection that ``sources/fused_write.py`` proved on
 the write side: pure Python cannot inject a strategy, but patching the two
 DataFrame actions and inspecting ``queryExecution().optimizedPlan()`` sees
@@ -38,21 +37,28 @@ grid step.  Like the reference's CountPlan/AggregatePlan, the fast path
 trusts header FIELD VALUES (a lying-but-intact header answers the same
 wrong count on both engines, because the scan also plans record sections
 from the header count) — but unlike the reference it refuses to answer
-where the real scan would FAIL: before answering, every file is stat'd and
-must be at least ``data_offset + count·stride`` bytes (PLY: the element's
-section end; PCD: ``DATA binary`` section end), so a truncated body
-declines to the real scan and surfaces the same error the user would see
-without the fast path (VERDICT r10 "What's wrong" #1).  ascii PLY /
-non-binary PCD have no fixed stride to check, so they decline too.
-``smart_scan(verify=True)`` remains the cross-checking variant, and any
-header parse failure, heterogeneous/non-positive grid, or unexpected plan
-shape falls back to the real scan.
+where the real scan would FAIL: every file must pass the transcoder's
+whole-file guard (``sources/transcode.py::whole_headers``: size ≥ the
+layout's ``offset + count·stride``; PLY: the element's section end; PCD:
+``DATA binary`` section end), so a truncated body declines to the real
+scan and surfaces the same error the user would see without the fast path
+(VERDICT r10 "What's wrong" #1).  ascii PLY / non-binary PCD have no fixed
+stride to check, so they decline too.  Any header parse failure,
+heterogeneous/non-positive grid, or unexpected plan shape falls back to
+the real scan.  To audit header bounds against the data, run the same
+aggregate on a read with ``.option("fusedRead", "false")``.
 
 Opt-outs: session-wide ``spark.conf.set("spark.iqmulus.fusedRead",
 "false")`` or per-read ``.option("fusedRead", "false")``.
 """
 
 from __future__ import annotations
+
+from pyspark.sql import Row
+
+from ..sources.las_format import POINT_FORMATS
+from ..sources.transcode import read_layout, whole_headers
+from .header_catalog import world_bounds
 
 #: read options that cannot change the row COUNT of the scan.  ``columns``
 #: prunes fields (row-preserving); ``element`` is passed through to the
@@ -82,15 +88,13 @@ _MINMAX_NEUTRAL_OPTS = {
 #: silently (round-12 self-review).
 _MANIFEST_NEUTRAL_OPTS = _MINMAX_NEUTRAL_OPTS
 
-_SOURCES = {"las": ".las", "ply": ".ply", "pcd": ".pcd"}
-
 
 def _simple(jobj) -> str:
     return jobj.getClass().getSimpleName()
 
 
 def _scan_relation(node, neutral_opts):
-    """``(source_name, options_dict, failfast)`` when ``node`` is a
+    """``(layout, options_dict, failfast)`` when ``node`` is a
     DataSourceV2ScanRelation of one of our Python sources whose read
     options are all in ``neutral_opts`` (with ``fusedRead`` ≠ false),
     else None.  ``failfast`` is True when the read carries an explicit
@@ -102,14 +106,15 @@ def _scan_relation(node, neutral_opts):
     table = rel.table()
     if not table.getClass().getName().endswith("PythonTable"):
         return None
-    source = str(table.name())
-    if source not in _SOURCES:
-        return None
     opts = {}
     it = rel.options().entrySet().iterator()
     while it.hasNext():
         e = it.next()
         opts[str(e.getKey()).lower()] = str(e.getValue())
+    try:
+        layout = read_layout(str(table.name()), opts.get("element", "vertex"))
+    except ValueError:
+        return None  # a Python source without a point-cloud layout
     # explicit fail-fast is output-neutral: the scan then either equals
     # the raw files or RAISES — and every raise case (unparseable header,
     # short body) already declines through the parse/stat guards, so the
@@ -136,67 +141,27 @@ def _scan_relation(node, neutral_opts):
     # (round-12 self-review — a manifest built over an already-truncated
     # file is 'fresh' yet records a partial answer the fail-fast scan
     # would refuse)
-    return source, checked, failfast
+    return layout, checked, failfast
 
 
-def _paths_for(source: str, opts: dict) -> list[str]:
+def _paths_for(layout, opts: dict) -> list[str]:
     from ..sources.pointcloud_common import expand_paths
 
-    o = dict(opts)
-    o["ext"] = _SOURCES[source]
-    return expand_paths(o)
+    return expand_paths({**opts, "ext": layout.ext})
 
 
-def _verified_parsed(source: str, paths: list[str], element: str):
-    """``(headers, total)`` with Σ per-file header counts, answerable ONLY
-    when every file's size covers its declared data section
-    (``size ≥ data_offset + count·stride`` — the truncation stat-guard,
-    VERDICT r10 #1).  O(files) header parses + stats (one pooled pass),
-    zero Spark jobs.  Returns None (decline to the real scan) on any
-    shortfall or on layouts without a fixed stride to check (ascii PLY,
-    non-binary PCD)."""
-    from ..sources.pointcloud_common import headers_with_sizes
-
-    if source == "las":
-        from ..sources.las_format import LasHeader
-
-        parsed = headers_with_sizes(LasHeader.parse_file, paths)
-        for h, size in parsed:
-            if size < h.offset_to_points + h.pdr_nb * h.stride:
-                return None
-        return [h for h, _ in parsed], sum(h.pdr_nb for h, _ in parsed)
-    if source == "pcd":
-        from ..sources.pcd_format import PcdHeader
-
-        parsed = headers_with_sizes(PcdHeader.parse_file, paths)
-        for h, size in parsed:
-            if h.data_kind != "binary":
-                return None
-            if size < h.data_offset + h.points * h.stride:
-                return None
-        return [h for h, _ in parsed], sum(h.points for h, _ in parsed)
-    from ..sources.ply_format import PlyHeader
-
-    parsed = headers_with_sizes(PlyHeader.parse_file, paths)
-    total = 0
-    for h, size in parsed:
-        if h.is_ascii:
-            return None
-        el = h.element(element)
-        if el is None:
-            continue
-        if size < h.section_offset(element) + el.byte_size:
-            return None
-        total += el.count
-    return [h for h, _ in parsed], total
+def _guarded(layout, paths, count_cols=()):
+    """``(headers, Σ header counts)`` when every file passes the whole-file
+    guard and every ``count(col)`` column in ``count_cols`` is provably
+    non-null, else None (decline to the real scan).  O(files) header
+    parses + stats, zero Spark jobs."""
+    headers = whole_headers(layout, paths)
+    if headers is None or not _cols_never_null(layout, headers, count_cols):
+        return None
+    return headers, sum(layout.section(h)[1] for h in headers)
 
 
-def _verified_count(source: str, paths: list[str], element: str) -> int | None:
-    got = _verified_parsed(source, paths, element)
-    return None if got is None else got[1]
-
-
-def _cols_never_null(source, headers, cols, element: str) -> bool:
+def _cols_never_null(layout, headers, cols) -> bool:
     """True when every column in ``cols`` is provably non-null in EVERY
     row-contributing file, so ``count(col) == count(*)``:
 
@@ -208,43 +173,24 @@ def _cols_never_null(source, headers, cols, element: str) -> bool:
       column MISSING from a file's layout null-fills under the merged
       schema (adapt_batch), so presence is required per file.
     Files contributing zero rows can't produce nulls and are skipped."""
-    safe_always = {"fid", "pid"}
-    if all(c in safe_always for c in cols):
-        return True
-    need = [c for c in cols if c not in safe_always]
-    if source == "las":
-        from ..sources.las_format import POINT_FORMATS
-
-        for h in headers:
-            if h.pdr_nb == 0:
-                continue
-            own = {n for n, _ in POINT_FORMATS[h.pdr_format]}
-            extras = {e.name for e in h.extra_fields}
+    need = [c for c in cols if c not in ("fid", "pid")]
+    for h in headers if need else ():
+        if layout.section(h)[1] == 0:
+            continue
+        if layout.ext == ".las":
             # an ExtraBytes descriptor shadowing a format-own name is a
             # malformed layout the decode would reject — decline rather
             # than answer ahead of the scan's failure
-            if any(c not in own or c in extras for c in need):
-                return False
-        return True
-    if source == "pcd":
-        for h in headers:
-            if h.points == 0:
-                continue
-            names = {f.name for f in h.fields}
-            if any(c not in names for c in need):
-                return False
-        return True
-    for h in headers:
-        el = h.element(element)
-        if el is None or el.count == 0:
-            continue
-        names = {p.name for p in el.properties}
+            names = {n for n, _ in POINT_FORMATS[h.pdr_format]}
+            names -= {e.name for e in h.extra_fields}
+        else:
+            names = {n for n, _ in layout.record(h)[1]}
         if any(c not in names for c in need):
             return False
     return True
 
 
-def _try_manifest_aggregate(df, source, opts, wanted, paths, failfast=False):
+def _try_manifest_aggregate(df, layout, opts, wanted, paths, failfast=False):
     """Global min/max of ANY manifest-covered column (and counts), on any
     of the three formats, answered from a FRESH scan-stats manifest —
     closing the asymmetry where ``count()`` is free on all three formats
@@ -284,14 +230,16 @@ def _try_manifest_aggregate(df, source, opts, wanted, paths, failfast=False):
         mpath = discover(paths)
         if not mpath:
             return None
-    if failfast:
-        # explicit ignoreCorruptFiles=false: the manifest itself has no
-        # per-file parse/stat guard, and a manifest built over an
-        # already-truncated file is FRESH (mtime/size match) yet records
-        # the partial answer a fail-fast scan would refuse — re-prove a
-        # real scan would succeed before answering (round-12 self-review)
-        if _verified_parsed(source, paths, opts.get("element", "vertex")) is None:
-            return None
+    # explicit ignoreCorruptFiles=false: the manifest itself has no
+    # per-file parse/stat guard, and a manifest built over an
+    # already-truncated file is FRESH (mtime/size match) yet records the
+    # partial answer a fail-fast scan would refuse — re-prove a real scan
+    # would succeed before answering (round-12 self-review).  count(col)
+    # == count(*) needs the per-file presence proof, which lives in the
+    # headers, not the manifest.
+    count_cols = [c for _, k, c in wanted if k == "count_col"]
+    if (failfast or count_cols) and _guarded(layout, paths, count_cols) is None:
+        return None
     import pyarrow.parquet as pq
 
     try:
@@ -318,16 +266,6 @@ def _try_manifest_aggregate(df, source, opts, wanted, paths, failfast=False):
         if st.st_mtime_ns != r["mtime_ns"] or st.st_size != r["size"]:
             return None  # stale manifest → real scan
     total = sum(int(r["n_points"]) for r in rows)
-    count_cols = [c for _, k, c in wanted if k == "count_col"]
-    if count_cols:
-        # count(col) == count(*) needs the per-file presence proof, which
-        # lives in the headers, not the manifest
-        element = opts.get("element", "vertex")
-        got = _verified_parsed(source, paths, element)
-        if got is None or not _cols_never_null(
-            source, got[0], count_cols, element
-        ):
-            return None
     import pyarrow as pa
 
     int_types = {"tinyint", "smallint", "int", "bigint"}
@@ -366,8 +304,6 @@ def _try_manifest_aggregate(df, source, opts, wanted, paths, failfast=False):
         else:
             v = min(nn) if nn else float("nan")
         values.append(int(v) if dt in int_types else float(v))
-    from pyspark.sql import Row
-
     return [Row(*[n for n, _, _ in wanted])(*values)]
 
 
@@ -393,15 +329,14 @@ def _try_header_count(df):
     found = _scan_relation(node, _COUNT_NEUTRAL_OPTS)
     if found is None:
         return None
-    source, opts, _ = found  # count path re-proves via the stat-guard itself
-    return _verified_count(
-        source, _paths_for(source, opts), opts.get("element", "vertex")
-    )
+    layout, opts, _ = found  # count path re-proves via the stat-guard itself
+    got = _guarded(layout, _paths_for(layout, opts))
+    return None if got is None else got[1]
 
 
 def _try_header_aggregate(df):
     """Header-catalog answer (list[Row]) for a global count/min/max
-    aggregate over a bare LAS scan, or None."""
+    aggregate over a bare las/ply/pcd scan, or None."""
     if not _enabled(df):
         return None
     plan = df._jdf.queryExecution().optimizedPlan()
@@ -420,9 +355,9 @@ def _try_header_aggregate(df):
     found = _scan_relation(node, _COUNT_NEUTRAL_OPTS)
     if found is None:
         return None
-    source, opts, failfast = found
-    # every aggregate must be count(1) or min/max of a stored x/y/z attr
-    wanted = []  # (name, kind, axis)
+    layout, opts, failfast = found
+    # every aggregate must be count(1), count(col) or min/max of a column
+    wanted = []  # (name, kind, column)
     aggs = plan.aggregateExpressions()
     for i in range(aggs.size()):
         ne = aggs.apply(i)
@@ -461,61 +396,43 @@ def _try_header_aggregate(df):
     if not wanted:
         return None
 
-    paths = _paths_for(source, opts)
+    paths = _paths_for(layout, opts)
     if not paths:
         return None
-    count_only = all(k in ("count", "count_col") for _, k, _ in wanted)
-    if count_only:
+    count_cols = [c for _, k, c in wanted if k == "count_col"]
+    if all(k in ("count", "count_col") for _, k, _ in wanted):
         # SQL ``SELECT count(*) FROM view`` over ply/pcd answers from
         # headers like LAS — the reference's CountPlan matches ANY binary
-        # relation (ExtraStrategies.scala:102-105); min/max stays LAS-only
-        # because only LAS headers carry bounds (VERDICT r10 missing #1)
-        element = opts.get("element", "vertex")
-        got = _verified_parsed(source, paths, element)
+        # relation (ExtraStrategies.scala:102-105)
+        got = _guarded(layout, paths, count_cols)
         if got is None:
             return None
-        headers, total = got
-        cols = [c for _, k, c in wanted if k == "count_col"]
-        if cols and not _cols_never_null(source, headers, cols, element):
-            return None
-        from pyspark.sql import Row
-
-        return [Row(*[n for n, _, _ in wanted])(*[total] * len(wanted))]
-    minmax_cols = [c for _, k, c in wanted if k in ("min", "max")]
-    if source != "las" or any(c not in ("x", "y", "z") for c in minmax_cols):
-        # PLY/PCD headers carry no bounds, and LAS bounds cover only
-        # x/y/z — but a FRESH scan-stats manifest answers min/max of ANY
-        # column it was built over, on any of the three formats (VERDICT
-        # r11 next #2; generalized beyond x/y/z in round 12)
-        return _try_manifest_aggregate(df, source, opts, wanted, paths, failfast)
-    rows = _las_header_minmax(opts, wanted, paths)
-    if rows is not None:
-        return rows
-    # LAS header leg declined (mixed/negative grid, truncated body) — a
-    # fresh manifest/sidecar can still answer (round 13): its freshness
-    # rule makes the answer exact regardless of grid uniformity
-    return _try_manifest_aggregate(df, source, opts, wanted, paths, failfast)
+        return [Row(*[n for n, _, _ in wanted])(*[got[1]] * len(wanted))]
+    # only LAS headers carry bounds, and only for x/y/z (VERDICT r10
+    # missing #1); when that leg declines (mixed/negative grid, truncated
+    # body), or for PLY/PCD and other columns, a FRESH scan-stats
+    # manifest answers min/max of ANY column it was built over, on any of
+    # the three formats (VERDICT r11 next #2, generalized in round 12):
+    # its freshness rule makes the answer exact regardless of the grid
+    if layout.ext == ".las" and all(
+        c in ("x", "y", "z") for _, k, c in wanted if k in ("min", "max")
+    ):
+        rows = _las_header_minmax(layout, opts, wanted, paths, count_cols)
+        if rows is not None:
+            return rows
+    return _try_manifest_aggregate(df, layout, opts, wanted, paths, failfast)
 
 
-def _las_header_minmax(opts, wanted, paths):
+def _las_header_minmax(layout, opts, wanted, paths, count_cols):
     """The LAS x/y/z header-bounds leg: list[Row] or None (decline)."""
     if any(k not in _MINMAX_NEUTRAL_OPTS for k in opts):
         return None
-
-    from ..sources.las_format import LasHeader
-    from ..sources.pointcloud_common import headers_with_sizes
-
-    parsed = headers_with_sizes(LasHeader.parse_file, paths)
-    for h, size in parsed:
-        # the truncation stat-guard applies to min/max too: a short data
-        # section makes the real scan fail, so the fast path must decline
-        if size < h.offset_to_points + h.pdr_nb * h.stride:
-            return None
-    headers = [h for h, _ in parsed]
-    total = sum(h.pdr_nb for h in headers)
-    count_cols = [c for _, k, c in wanted if k == "count_col"]
-    if count_cols and not _cols_never_null("las", headers, count_cols, ""):
+    # the whole-file guard applies to min/max too: a short data section
+    # makes the real scan fail, so the fast path must decline
+    got = _guarded(layout, paths, count_cols)
+    if got is None:
         return None
+    headers, total = got
     # raw = round((world − offset)/scale) needs one uniform grid, and a
     # POSITIVE scale — a negative scale inverts the world↔raw order, so
     # the header world minimum would map to the raw maximum (ADVICE r10)
@@ -525,22 +442,16 @@ def _las_header_minmax(opts, wanted, paths):
     scale, offset = next(iter(grids))
     if any(s <= 0 for s in scale):
         return None
+    bounds = world_bounds(headers)  # None everywhere over an empty scan
     values = []
-    nonempty = [h for h in headers if h.pdr_nb > 0]
     for name, kind, col in wanted:
         if kind in ("count", "count_col"):
             values.append(total)
-        elif total == 0:
-            values.append(None)  # min/max over an empty scan is NULL
-        else:
-            ax = "xyz".index(col)  # gated above: header bounds are x/y/z
-            if kind == "min":
-                world = min(h.pmin[ax] for h in nonempty)
-            else:
-                world = max(h.pmax[ax] for h in nonempty)
-            values.append(int(round((world - offset[ax]) / scale[ax])))
-    from pyspark.sql import Row
-
+            continue
+        world, ax = bounds[f"{col}_{kind}"], "xyz".index(col)
+        values.append(
+            None if world is None else int(round((world - offset[ax]) / scale[ax]))
+        )
     return [Row(*[n for n, _, _ in wanted])(*values)]
 
 

@@ -18,10 +18,13 @@ Provenance columns (``fid`` file index, ``pid`` record index —
 
 from __future__ import annotations
 
+import logging
 from dataclasses import dataclass, field
 
 import numpy as np
 import pyarrow as pa
+
+_log = logging.getLogger(__name__)
 
 #: Arrow type per signed numpy char (what Spark sees; unsigned storage is
 #: bit-preserved into the same-width signed type, as the reference does).
@@ -37,7 +40,7 @@ _ARROW_TYPES = {
 _SIGNED = {"u1": "i1", "u2": "i2", "u4": "i4", "u8": "i8"}
 
 #: files already warned about a short data section, per worker process —
-#: keeps a many-partition truncated file to one stderr line per process.
+#: keeps a many-partition truncated file to one warning per process.
 #: Keyed on (path, mtime_ns, size) so a file REWRITTEN or re-truncated
 #: differently warns again in a long-lived worker (ADVICE r12); bounded
 #: in practice by the number of distinct corrupt file versions a worker
@@ -99,7 +102,7 @@ class BinarySection:
         file actually holds when the data section is shorter than the
         header claims — Spark's own ``ignoreCorruptFiles`` contract
         ("partial results from corrupted files may be returned"), with a
-        stderr warning.  Without it a short read raises, failing the job
+        logged warning.  Without it a short read raises, failing the job
         fast (VERDICT r10 #2)."""
         dtype = self.numpy_dtype()
         with open(self.path, "rb") as f:
@@ -115,16 +118,13 @@ class BinarySection:
             st = _os.stat(self.path)
             key = (self.path, st.st_mtime_ns, st.st_size)
             if key not in _WARNED_SHORT_PATHS:
-                import sys
-
                 if len(_WARNED_SHORT_PATHS) >= _WARNED_SHORT_CAP:
                     _WARNED_SHORT_PATHS.clear()
                 _WARNED_SHORT_PATHS.add(key)
-                print(
-                    f"spark_iqmulus_spark: {self.path}: data section is short"
-                    f" ({have}/{n_records} records in range at {rec_start});"
+                _log.warning(
+                    "%s: data section is short (%d/%d records in range at %d);"
                     " decoding partial results (ignoreCorruptFiles)",
-                    file=sys.stderr,
+                    self.path, have, n_records, rec_start,
                 )
             n_records = have
             buf = buf[: have * self.stride]

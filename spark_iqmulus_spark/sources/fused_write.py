@@ -49,8 +49,10 @@ analysis time falls back to the general sink silently and side-effect
 free; ``.option("fusedWrite", "false")`` disables the rewrite explicitly
 (the equivalence tests use it to run both paths).
 
-This is the write-side sibling of the ``smart_scan`` facade (SURVEY §1.4
-A15): pure Python cannot inject a Catalyst strategy, so the planner-level
+This is the write-side sibling of the transparent header answers in
+``plans/fused_read.py`` (SURVEY §1.4 A15), and both decline through the
+same whole-file guard (``transcode.whole_headers``): pure Python cannot
+inject a Catalyst strategy, so the planner-level
 rewrite the reference does in Scala is expressed at the API layer —
 inspecting the *optimized* plan through the py4j gateway, which sees
 exactly what a strategy would see.
@@ -319,31 +321,28 @@ def _fid_paths(schema):
 
 
 def _source_headers(layout, paths):
-    """Parse the sources through the transcoder's own layout and apply its
-    uniformity rule: ``(headers, endian, fields)``, or None (the decline)
-    when a header does not parse, the sources are not uniform (the general
-    sink re-encodes heterogeneous inputs), or a data section is shorter
-    than its header claims.  That truncation stat-guard mirrors
-    plans/fused_read.py: the byte path would RAISE mid-transcode while the
-    general sink (allow_short scan) writes the partial records."""
-    from .pointcloud_common import headers_with_sizes
+    """Parse the sources through the transcoder's own layout, its
+    whole-file guard and its uniformity rule: ``(headers, endian,
+    fields)``, or None (the decline) when a header does not parse, a data
+    section is shorter than its header claims or has no fixed stride (the
+    byte path would RAISE mid-transcode while the general sink's
+    allow_short scan writes the partial records), or the sources are not
+    uniform (the general sink re-encodes heterogeneous inputs)."""
+    from .transcode import whole_headers
 
     try:
-        parsed = headers_with_sizes(layout.parse, paths)
+        headers = whole_headers(layout, paths)
     except Exception:
         return None
-    headers = [h for h, _ in parsed]
+    if headers is None:
+        return _no(
+            "a source's data section is shorter than its header claims or"
+            " has no fixed stride (the general sink reads it)"
+        )
     try:
         endian, fields = layout.check_uniform(paths, headers)
     except ValueError as exc:
         return _no(f"sources are not byte-uniform: {exc}")
-    for h, size in parsed:
-        offset, count, stride = layout.section(h)
-        if size < offset + count * stride:
-            return _no(
-                f"{h.location or 'source'}: data section shorter than the"
-                " header claims (general sink writes partial records)"
-            )
     return headers, endian, fields
 
 

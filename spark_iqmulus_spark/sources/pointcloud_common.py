@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import glob
 import json
+import logging
 import os
 from dataclasses import dataclass
 
@@ -14,6 +15,8 @@ from pyspark.sql import types as T
 from pyspark.sql.datasource import InputPartition
 
 from .binary_section import BinarySection
+
+_log = logging.getLogger(__name__)
 
 #: default split target (bytes) — record-aligned chunks of ~this many bytes;
 #: matches the role of maxPartitionBytes for builtin sources.
@@ -123,7 +126,7 @@ def ignore_corrupt_option(options) -> bool:
 
     The reference skips unreadable files with a warning, unconditionally
     (PlyRelation.scala:101-115, LasRelation.scala:41-55), so that is the
-    default here: one bad tile in a 100k-tile read degrades to a stderr
+    default here: one bad tile in a 100k-tile read degrades to a logged
     warning, not a failed job.  Since round 11 the option covers the DATA
     section too, matching Spark's built-in contract ("partial results from
     corrupted files may be returned"): a body shorter than the header
@@ -274,20 +277,6 @@ def pmap_headers(parse_one, paths):
         return list(pool.map(parse_one, paths))
 
 
-def headers_with_sizes(parse_one, paths):
-    """``[(header, file_size)]`` in one pooled pass — the truncation
-    stat-guard's input (fused read AND write: both must decline when a
-    file's body is shorter than its header claims, because the real
-    scan's behavior differs from header arithmetic there)."""
-    from . import fsio
-
-    def one(p):
-        fs, fp = fsio.from_uri_or_local(p)
-        return parse_one(p), fsio.file_size(fp, fs)
-
-    return pmap_headers(one, paths)
-
-
 def parse_sections(paths, parse_one, ignore_corrupt: bool, kind: str):
     """Parse per-file headers, assigning ``fid`` from the KEPT list position.
 
@@ -302,8 +291,6 @@ def parse_sections(paths, parse_one, ignore_corrupt: bool, kind: str):
     re-assembled in ``paths`` order, so fid assignment is identical to the
     serial loop.
     """
-    import sys
-    from concurrent.futures import ThreadPoolExecutor
 
     def attempt(path):
         try:
@@ -311,11 +298,7 @@ def parse_sections(paths, parse_one, ignore_corrupt: bool, kind: str):
         except Exception as exc:  # re-raised or warned in order below
             return (path, None, exc)
 
-    if len(paths) > 1:
-        with ThreadPoolExecutor(max_workers=min(32, len(paths))) as pool:
-            results = list(pool.map(attempt, paths))
-    else:
-        results = [attempt(p) for p in paths]
+    results = pmap_headers(attempt, paths)
 
     out = []
     skipped = 0
@@ -323,10 +306,7 @@ def parse_sections(paths, parse_one, ignore_corrupt: bool, kind: str):
         if exc is not None:
             if ignore_corrupt:
                 skipped += 1
-                print(
-                    f"WARNING: skipping unreadable {kind} {path}: {exc}",
-                    file=sys.stderr,
-                )
+                _log.warning("skipping unreadable %s %s: %s", kind, path, exc)
                 continue
             raise ValueError(f"unreadable {kind} file {path}: {exc}") from exc
         out.append((len(out), path, parsed))
@@ -334,13 +314,12 @@ def parse_sections(paths, parse_one, ignore_corrupt: bool, kind: str):
         # headline count so a shrunk read is visible at a glance, not only
         # via per-file lines buried in the log (ADVICE r4); the driver-side
         # audit path is plans.header_catalog.scan_report(paths, fmt)
-        print(
-            f"WARNING: {kind} read skipped {skipped}/{len(results)} unreadable"
-            " file(s) (ignoreCorruptFiles=true default — reference parity,"
-            " PlyRelation.scala:101-115); pass"
+        _log.warning(
+            "%s read skipped %d/%d unreadable file(s) (ignoreCorruptFiles=true"
+            " default — reference parity, PlyRelation.scala:101-115); pass"
             " .option('ignoreCorruptFiles','false') for fail-fast, or audit"
             " with header_catalog.scan_report()",
-            file=sys.stderr,
+            kind, skipped, len(results),
         )
     return out
 

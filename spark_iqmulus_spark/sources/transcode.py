@@ -35,7 +35,11 @@ PLY/PCD keep exactly the projected ``(out, src)`` pairs, renames included,
 and a computed field takes its program's storage char.  No projection and
 no computed field means a verbatim byte copy.  LAS header statistics
 (world bounds, return histogram, ExtraBytes min/max) are the one LAS-only
-step in the worker.
+step in the worker.  The layouts are also the one home of each format's
+header facts outside the transcoder: ``whole_headers`` (every file holds
+its whole record section) is the guard the header fast path
+(``plans/fused_read.py``) and the fused write share, and
+``plans/header_catalog.py`` parses through ``read_layout``.
 
 Merged and tiled variants differ only in the fid→destination map fed to
 the one driver: merged sends every source to one file, always written
@@ -361,8 +365,13 @@ class _Ply(_Layout):
         return ("<" if h.little_endian else ">"), [(p.name, p.np_char) for p in props]
 
     def section(self, h):
+        # ascii records have no fixed stride; a file without the element
+        # holds none of its records
         el = h.element(self.element)
-        return h.section_offset(self.element), el.count, el.stride
+        stride = None if h.is_ascii else el.stride if el else 0
+        if el is None:
+            return 0, 0, stride
+        return h.section_offset(self.element), el.count, stride
 
     def header(self, dest, rows, srcs, out_fields):
         return PlyHeader(
@@ -395,7 +404,8 @@ class _Pcd(_Layout):
         return "<", [(f.name, f.np_char) for f in h.fields]
 
     def section(self, h):
-        return h.data_offset, h.points, h.stride
+        # only DATA binary is record-major with a fixed stride
+        return h.data_offset, h.points, h.stride if h.data_kind == "binary" else None
 
     def header(self, dest, rows, srcs, out_fields):
         total = sum(r["m"] for r in rows)
@@ -433,6 +443,38 @@ class _LasToPly(_Las):
                 raise ValueError(f"unknown column {c!r}; have {sorted(known)}")
         out_fields = [(c, "f8" if c in _XYZ else known[c]) for c in self.columns]
         return [(c, c, None, None, c in _XYZ) for c in self.columns], out_fields, None
+
+
+def read_layout(fmt: str, element: str = "vertex"):
+    """The layout of source format ``fmt`` (``element``: the PLY element
+    read); ValueError for a format without one."""
+    if fmt == "ply":
+        return _Ply(element)
+    if fmt not in ("las", "pcd"):
+        raise ValueError(f"no point-cloud layout for format {fmt!r}")
+    return _Las() if fmt == "las" else _Pcd()
+
+
+def whole_headers(layout, paths):
+    """The whole-file guard: the parsed headers of ``paths`` when every
+    file holds the whole record section its header declares (``size ≥
+    offset + count·stride``), else None.  A layout without a fixed stride
+    (ascii PLY, non-binary PCD) declines too.  A shorter file is a
+    truncated body or a lying header: the real scan fails on it (or, with
+    ``ignoreCorruptFiles``, reads partial records), so header arithmetic
+    must not answer for it.  One pooled pass of header parses and stats;
+    a header that does not parse raises."""
+
+    def one(p):
+        fs, fp = fsio.from_uri_or_local(p)
+        return layout.parse(p), fsio.file_size(fp, fs)
+
+    parsed = pmap_headers(one, paths)
+    for h, size in parsed:
+        offset, count, stride = layout.section(h)
+        if stride is None or size < offset + count * stride:
+            return None
+    return [h for h, _ in parsed]
 
 
 # -- the engine -------------------------------------------------------------------

@@ -358,20 +358,30 @@ def test_minmax_through_projection_stays_fast(spark, tmp_path):
     assert isinstance(row["mn"], int)
 
 
-def test_smart_verify_scan_bypasses_fast_path(spark, tiles):
-    """Code-review r10: smart_scan(verify=True)'s cross-check scan must
-    NOT be answered by the transparent header fast path — that would
-    verify the headers against themselves.  The verify frame carries
-    fusedRead=false, so the fast-path gate declines it."""
-    from spark_iqmulus_spark.plans.fused_read import _try_header_count
-    from spark_iqmulus_spark.plans.header_catalog import smart_las
+def test_minmax_skips_empty_tile(spark, tmp_path):
+    """The header min/max fast path reads bounds of non-empty files only,
+    behind the shared whole-file guard: an empty tile's (0, 0, 0) header
+    bounds never reach the answer, which equals the real scan's with zero
+    jobs."""
+    from spark_iqmulus_spark.sources.las_format import LasHeader
 
-    smart = smart_las(spark, tiles, verify=True)
-    assert _try_header_count(smart.toDF()) is None  # real scan path
-    assert smart.count() == 8000  # and the verified answer still agrees
+    d = tmp_path / "with_empty"
+    d.mkdir()
+    off = (20000.0, 20000.0, 20000.0)  # every world coordinate > 0
+    arr = make_las(str(d / "full.las"), n=1000, fmt=1, offset=off)
+    with open(d / "empty.las", "wb") as f:
+        f.write(LasHeader(location=str(d / "empty.las"), pdr_format=1, offset=off).to_bytes())
+    df = spark.read.format("las").load(str(d))
 
-    fast = smart_las(spark, tiles, verify=False)
-    assert _try_header_count(fast.toDF()) == 8000  # non-verify stays fast
+    def agg(frame):
+        return frame.agg(F.min("x"), F.max("x"), F.min("z"), F.count("*")).collect()
+
+    before = _jobs(spark)
+    fast = agg(df)
+    assert _jobs(spark) == before
+    assert fast == _real(df, agg)
+    # raw grid values: the empty tile's world 0 would map to raw -2,000,000
+    assert tuple(fast[0]) == (arr["x"].min(), arr["x"].max(), arr["z"].min(), 1000)
 
 
 # --- manifest-backed min/max for bounds-less formats — round 12 ------------

@@ -132,10 +132,12 @@ def test_plan_record_ranges_partition(count, stride, target):
             assert n * stride <= max(target, stride)
 
 
-def test_short_read_warns_once_per_file(capsys):
-    """ADVICE r11: a truncated file read across many partitions emits ONE
-    stderr warning per worker process, not one per read_batch call."""
+def test_short_read_warns_once_per_file(caplog):
+    """ADVICE r11: a truncated file read across many partitions logs ONE
+    warning per worker process, not one per read_batch call."""
     from spark_iqmulus_spark.sources import binary_section as bs
+
+    caplog.set_level("WARNING", logger=bs.__name__)
 
     fields = [SectionField("v", "i4")]
     arr = np.arange(100, dtype="<i4")
@@ -155,7 +157,7 @@ def test_short_read_warns_once_per_file(capsys):
         b2 = section.read_batch(50, 25, fid=0, allow_short=True)
         b3 = section.read_batch(75, 25, fid=0, allow_short=True)
         assert (b1.num_rows, b2.num_rows, b3.num_rows) == (10, 0, 0)
-        err = capsys.readouterr().err
+        err = caplog.text
         assert err.count("data section is short") == 1
         assert path in err
         # ADVICE r12: the warn-once key includes mtime/size, so the SAME
@@ -163,9 +165,10 @@ def test_short_read_warns_once_per_file(capsys):
         with open(path, "wb") as out:
             out.write(arr.tobytes()[: 20 * 4])
         os.utime(path, ns=(1, 1))  # force a distinct mtime_ns
+        caplog.clear()
         b4 = section.read_batch(0, 100, fid=0, allow_short=True)
         assert b4.num_rows == 20
-        err2 = capsys.readouterr().err
+        err2 = caplog.text
         assert err2.count("data section is short") == 1
     finally:
         bs._WARNED_SHORT_PATHS.difference_update(

@@ -9,7 +9,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from .fixtures import make_las, make_pcd, make_ply_xyz, make_xyz_text
+from .fixtures import make_las, make_ply_xyz, make_xyz_text
 
 
 def test_ply_read(spark, tmp_path):
@@ -174,6 +174,25 @@ def test_header_catalog_consistency(spark, tmp_path):
     assert mm["x_max"] == pytest.approx(truth[1])
     assert mm["z_min"] == pytest.approx(truth[2])
     assert mm["z_max"] == pytest.approx(truth[3])
+
+
+def test_header_minmax_skips_empty_tiles(spark, tmp_path):
+    """An empty tile's header bounds (0, 0, 0) are not points: header
+    MIN/MAX is taken over non-empty files only, and is None (SQL NULL)
+    when every file is empty."""
+    from spark_iqmulus_spark.plans.header_catalog import minmax_from_headers
+    from spark_iqmulus_spark.sources.las_format import LasHeader
+
+    full, empty = str(tmp_path / "full.las"), str(tmp_path / "empty.las")
+    off = (20000.0, 20000.0, 20000.0)  # every world coordinate > 0
+    arr = make_las(full, n=1000, fmt=1, offset=off)
+    with open(empty, "wb") as f:
+        f.write(LasHeader(location=empty, pdr_format=1, offset=off).to_bytes())
+    mm = minmax_from_headers(spark, [full, empty])
+    for c in "xyz":
+        assert mm[f"{c}_min"] == pytest.approx(20000.0 + 0.01 * int(arr[c].min()))
+        assert mm[f"{c}_max"] == pytest.approx(20000.0 + 0.01 * int(arr[c].max()))
+    assert set(minmax_from_headers(spark, [empty]).values()) == {None}
 
 
 def test_las_file_skipping_pushdown(spark, tmp_path):
@@ -644,52 +663,6 @@ def test_many_destination_commit_parallel_merge(spark, tmp_path):
     assert set(per_fid.values()) == {per}
 
 
-def test_smart_las_facade(spark, tmp_path):
-    """smart_las: count()/minmax() answer from headers with no Spark job;
-    results equal the scanned truth; other attributes delegate to the scan;
-    verify=True catches a lying header."""
-    from spark_iqmulus_spark.functions.scaled import with_world_coords
-    from spark_iqmulus_spark.plans.header_catalog import smart_las
-
-    paths = []
-    for i in range(3):
-        p = str(tmp_path / f"s{i}.las")
-        make_las(p, n=2000 + 700 * i, fmt=1, seed=i)
-        paths.append(p)
-
-    smart = smart_las(spark, str(tmp_path), verify=True)
-    scan = spark.read.format("las").load(paths)
-    assert smart.count() == scan.count() == 2000 + 2700 + 3400
-    mm = smart.minmax()
-    truth = with_world_coords(scan).agg(
-        F.min("x"), F.max("x"), F.min("z"), F.max("z")
-    ).collect()[0]
-    assert mm["x_min"] == pytest.approx(truth[0])
-    assert mm["x_max"] == pytest.approx(truth[1])
-    assert mm["z_min"] == pytest.approx(truth[2])
-    assert mm["z_max"] == pytest.approx(truth[3])
-    # delegation: non-intercepted attrs behave like the DataFrame
-    assert smart.where(F.col("intensity") >= 0).count() == smart.count()
-    assert set(smart.columns[:2]) == {"fid", "pid"}
-
-    # a truncated tile: header claims more bytes than the file holds.
-    # The scan can't catch a consistent lie (it plans from the same
-    # header), so verify=True checks claimed bytes against file size.
-    import os as _os
-
-    from spark_iqmulus_spark.sources.las_format import LasHeader
-
-    liar = paths[0]
-    hdr = LasHeader.parse_file(liar)
-    size = _os.stat(liar).st_size
-    with open(liar, "r+b") as f:
-        f.truncate(size - 3 * hdr.stride)
-    with pytest.raises(ValueError, match="truncated|lying"):
-        smart_las(spark, [liar], verify=True).count()
-    # default (trusting) mode mirrors the reference: header wins
-    assert smart_las(spark, [liar]).count() == hdr.pdr_nb
-
-
 def test_columns_option_prunes_and_matches(spark, tmp_path):
     """Explicit column pruning (`columns` option): schema shrinks to the
     requested fields (+fid/pid), values match the unpruned read, and an
@@ -712,88 +685,3 @@ def test_columns_option_prunes_and_matches(spark, tmp_path):
     assert pr.count() == 500
 
 
-def test_smart_scan_all_formats(spark, tmp_path):
-    """smart_scan generalizes the A15 facade beyond LAS: count() is
-    header-answered for LAS/PLY/PCD; minmax() uses LAS headers or the
-    PLY/PCD stats-from-data manifest (written or built on demand), and the
-    answers match the full scan for every format."""
-    from spark_iqmulus_spark.plans.header_catalog import smart_scan
-    from spark_iqmulus_spark.plans.manifest import write_manifest_scan
-
-    las_dir = tmp_path / "las"; las_dir.mkdir()
-    ply_dir = tmp_path / "ply"; ply_dir.mkdir()
-    pcd_dir = tmp_path / "pcd"; pcd_dir.mkdir()
-    for i in range(2):
-        make_las(str(las_dir / f"t{i}.las"), n=1500 + i * 300, fmt=1, seed=i)
-        make_ply_xyz(str(ply_dir / f"t{i}.ply"), n=1200 + i * 100, seed=i)
-        make_pcd(str(pcd_dir / f"t{i}.pcd"), n=900 + i * 50, seed=i)
-
-    import pytest as _pytest
-
-    for fmt, d in (("las", las_dir), ("ply", ply_dir), ("pcd", pcd_dir)):
-        smart = smart_scan(spark, str(d), fmt=fmt, verify=True)
-        scan = smart.toDF()
-        assert smart.count() == scan.count()
-        mm = smart.minmax(("x", "z"))
-        if fmt == "las":
-            from spark_iqmulus_spark.functions.scaled import with_world_coords
-
-            world = with_world_coords(scan)
-        else:
-            world = scan.select(
-                F.col("x").cast("double").alias("x"),
-                F.col("z").cast("double").alias("z"),
-            )
-        truth = world.agg(
-            F.min("x"), F.max("x"), F.min("z"), F.max("z")
-        ).collect()[0]
-        assert mm["x_min"] == _pytest.approx(truth[0])
-        assert mm["x_max"] == _pytest.approx(truth[1])
-        assert mm["z_min"] == _pytest.approx(truth[2])
-        assert mm["z_max"] == _pytest.approx(truth[3])
-
-    # PLY bounds from a WRITTEN manifest: O(manifest) planning, same answer
-    mpath = str(tmp_path / "ply_manifest")
-    ply_paths = sorted(str(p) for p in ply_dir.glob("*.ply"))
-    write_manifest_scan(spark, ply_paths, mpath, fmt="ply", columns=("x", "z"))
-    smart_m = smart_scan(spark, str(ply_dir), fmt="ply", manifest_path=mpath)
-    mm_scan = smart_scan(spark, str(ply_dir), fmt="ply").minmax(("x", "z"))
-    assert smart_m.minmax(("x", "z")) == mm_scan
-
-    # ADVICE r7: a wider later minmax() must not silently return a dict
-    # missing the new columns' bounds.  On-demand manifests rebuild with
-    # the union of columns; written manifests raise naming the gap.
-    smart_grow = smart_scan(spark, str(ply_dir), fmt="ply")
-    first = smart_grow.minmax(("x", "z"))
-    wider = smart_grow.minmax(("x", "y", "z"))
-    assert set(wider) == {"x_min", "x_max", "y_min", "y_max", "z_min", "z_max"}
-    assert wider["x_min"] == first["x_min"] and wider["z_max"] == first["z_max"]
-    with _pytest.raises(ValueError, match="no bounds for.*'y'"):
-        smart_m.minmax(("x", "y"))
-
-    # a column the FILES don't have: clear error, and the rebuilt manifest
-    # is cached so the retry raises without re-running the stats scan
-    smart_absent = smart_scan(spark, str(ply_dir), fmt="ply")
-    smart_absent.minmax(("x",))
-    for _ in range(2):
-        with _pytest.raises(ValueError, match="not present in the ply"):
-            smart_absent.minmax(("x", "intensity"))
-    import spark_iqmulus_spark.plans.manifest as _mani
-
-    calls = []
-    orig = _mani.build_manifest_scan
-
-    def _counting(*a, **k):
-        calls.append(1)
-        return orig(*a, **k)
-
-    _mani.build_manifest_scan = _counting
-    try:
-        with _pytest.raises(ValueError, match="not present in the ply"):
-            smart_absent.minmax(("intensity",))
-        assert not calls  # known-absent: no rescan on retry
-    finally:
-        _mani.build_manifest_scan = orig
-
-    with _pytest.raises(ValueError, match="fmt must be"):
-        smart_scan(spark, str(las_dir), fmt="xyz")

@@ -1,7 +1,8 @@
-"""Capture .explain('formatted') for declared registry keys into plans/r13/.
+"""Capture .explain('formatted') for declared registry keys into plans/<out_subdir>/.
 
-Usage: python tools/explain_r13.py <tag> <key> [<key> ...]
-Writes plans/r13/<key>_<tag>.txt for each key (tag = before|after).
+Usage: python tools/explain.py <out_subdir> <tag> <key> [<key> ...]
+Writes plans/<out_subdir>/<key>_<tag>.txt for each key (tag = before|after),
+e.g. ``python tools/explain.py r14 after q_las_meta``.
 """
 
 from __future__ import annotations
@@ -17,17 +18,18 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
 def main() -> int:
-    tag = sys.argv[1]
-    keys = sys.argv[2:]
+    out_subdir, tag, keys = sys.argv[1], sys.argv[2], sys.argv[3:]
     from spark_iqmulus_spark.registry import all_queries
     from spark_iqmulus_spark.session import get_spark
     from spark_iqmulus_spark.sources import register_sources
 
     qs = all_queries()
-    spark = get_spark("explain_r13")
+    spark = get_spark("explain")
     spark.sparkContext.setLogLevel("ERROR")
     register_sources(spark)
-    out_dir = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r13")
+    out_dir = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", out_subdir
+    )
     os.makedirs(out_dir, exist_ok=True)
     for key in keys:
         fn = qs[key]
