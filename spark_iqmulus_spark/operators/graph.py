@@ -50,11 +50,15 @@ instead of lingering until an explicit ``unpersist``.  Pinned by
 
 from __future__ import annotations
 
+import logging
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .dedup import COSINE_T, q_dedup_embed_lsh
 from .similarity import _lsh_banded_cte
+
+_log = logging.getLogger(__name__)
 
 
 def _edge_cte() -> str:
@@ -165,7 +169,6 @@ def _validated_staged_edges(spark: SparkSession, staged: str, sf_dir: str) -> Da
     different graph into every graph query — ADVICE r9)."""
     import json as _json
     import os as _os
-    import sys as _sys
 
     df = spark.read.parquet(staged)
     if not {"a", "b"}.issubset(set(df.columns)):
@@ -178,10 +181,7 @@ def _validated_staged_edges(spark: SparkSession, staged: str, sf_dir: str) -> Da
     # skip exactly the mismatch the guard exists to catch
     cache_key = (staged, _os.path.abspath(sf_dir))
     if cache_key not in _STAGED_OK:
-        print(
-            f"[sim_edges] SPARK_GRAFT_EDGES_PARQUET override active: {staged}",
-            file=_sys.stderr,
-        )
+        _log.warning("SPARK_GRAFT_EDGES_PARQUET override active: %s", staged)
         meta_path = _os.path.join(staged, _EDGES_META)
         if _os.path.exists(meta_path):
             with open(meta_path) as f:
@@ -197,11 +197,10 @@ def _validated_staged_edges(spark: SparkSession, staged: str, sf_dir: str) -> Da
         elif _os.environ.get("SPARK_GRAFT_EDGES_ALLOW_NOSIDECAR"):
             # explicit opt-in for legacy stagings predating the sidecar —
             # warn-only, since provenance genuinely cannot be checked
-            print(
-                f"[sim_edges] no {_EDGES_META} sidecar at {staged} —"
-                " cannot verify which dataset these edges derive from"
-                " (SPARK_GRAFT_EDGES_ALLOW_NOSIDECAR set)",
-                file=_sys.stderr,
+            _log.warning(
+                "no %s sidecar at %s — cannot verify which dataset these"
+                " edges derive from (SPARK_GRAFT_EDGES_ALLOW_NOSIDECAR set)",
+                _EDGES_META, staged,
             )
         else:
             # default STRICT (ADVICE r10): stage_edges always writes a

@@ -11,7 +11,8 @@ Two paths over ``embeddings`` (``embedding: array<float>``):
   small, *regardless* of corpus size.
 - **LSH-bucketed** (``q_sim_knn_lsh``): the scale path when Q is large —
   random-hyperplane signatures, banded buckets, exact re-ranking only
-  within buckets.  Hyperplanes are derived deterministically (md5 of
+  within buckets; the signatures and the re-rank dot products run in a
+  numpy kernel over Arrow batches (``mapInArrow``).  Hyperplanes are derived deterministically (md5 of
   (plane, dim)), so results are reproducible; recall vs brute force is
   asserted in tests/test_similarity.py.
 """
@@ -19,9 +20,11 @@ Two paths over ``embeddings`` (``embedding: array<float>``):
 from __future__ import annotations
 
 import hashlib
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, IntegerType, StructField, StructType
 
 from ..session import load_tables, table_count
 
@@ -171,24 +174,26 @@ def _cosine(a, b, dim: int | None = None):
     return _dot(a, b, dim) / (F.sqrt(_dot(a, a, dim)) * F.sqrt(_dot(b, b, dim)))
 
 
-#: sf_dir → embedding dimensionality, read once from the parquet footer +
-#: first batch (no Spark job — replaces a per-call ``.first()`` driver job).
-_DIM_CACHE: dict[str, int] = {}
+#: embeddings.parquet path → (size, mtime_ns, dim): the dimensionality,
+#: read from the first row with pyarrow (no Spark job — replaces a per-call
+#: ``.first()`` driver job), re-read whenever the file is rewritten.
+_DIM_CACHE: dict[str, tuple[int, int, int]] = {}
 
 
 def embedding_dim(sf_dir: str) -> int:
-    dim = _DIM_CACHE.get(sf_dir)
-    if dim is None:
-        import os
+    import os
 
-        import pyarrow.dataset as ds
+    path = os.path.join(sf_dir, "embeddings.parquet")
+    st = os.stat(path)
+    hit = _DIM_CACHE.get(path)
+    if hit is not None and hit[:2] == (st.st_size, st.st_mtime_ns):
+        return hit[2]
+    import pyarrow.dataset as ds
 
-        dset = ds.dataset(
-            os.path.join(sf_dir, "embeddings.parquet"), format="parquet"
-        )
-        batch = next(iter(dset.to_batches(columns=["embedding"], batch_size=1)))
-        dim = len(batch.column(0)[0])
-        _DIM_CACHE[sf_dir] = dim
+    dset = ds.dataset(path, format="parquet")
+    batch = next(iter(dset.to_batches(columns=["embedding"], batch_size=1)))
+    dim = len(batch.column(0)[0])
+    _DIM_CACHE[path] = (st.st_size, st.st_mtime_ns, dim)
     return dim
 
 
@@ -252,33 +257,137 @@ def _hyperplanes(dim: int) -> list[list[float]]:
     return planes
 
 
+def _arrow_columns(col, dim: int):
+    """The first ``dim`` elements of each row of an Arrow list column as a
+    ``(dim, n)`` float64 matrix (element ``i`` of every row contiguous),
+    plus a mask of the rows whose SQL chain is NULL: the array is NULL,
+    shorter than ``dim``, or has a NULL among its first ``dim`` elements,
+    because ``get`` past the end is NULL and ``x + NULL`` is NULL.
+    Widening float32 to float64 is exact, as ``CAST(x AS DOUBLE)`` is."""
+    import numpy as np
+
+    n = len(col)
+    offsets = col.offsets.to_numpy()
+    values = col.values
+    if (
+        col.null_count == 0
+        and values.null_count == 0
+        and (np.diff(offsets) == dim).all()
+    ):
+        flat = values.slice(offsets[0], n * dim).to_numpy(zero_copy_only=False)
+        mat, null = flat.reshape(n, dim), np.zeros(n, dtype=bool)
+        return np.ascontiguousarray(mat.T, dtype=np.float64), null
+    null = np.diff(offsets) < dim
+    if col.null_count:
+        null |= col.is_null().to_numpy(zero_copy_only=False)
+    # rows that are NULL gather the pad slot appended past the values
+    idx = np.where(null[:, None], len(values), offsets[:-1, None] + np.arange(dim))
+    vals = np.append(values.to_numpy(zero_copy_only=False), 0.0)
+    if values.null_count:
+        null |= np.append(values.is_null().to_numpy(zero_copy_only=False), False)[
+            idx
+        ].any(axis=1)
+    return np.ascontiguousarray(vals[idx].T, dtype=np.float64), null
+
+
+def _chain_sums(x, y):
+    """``acc + x[:, i] * y[:, i]`` for ``i`` in order from ``0.0``, per leading
+    index of the float64 ``x``/``y`` (shape ``(k, dim, n)``, or ``(k, dim, 1)``
+    to broadcast one vector over every row): the same IEEE operations, in
+    the same order, as the SQL chain
+    ``0.0D + (CAST(x0 AS DOUBLE) * CAST(y0 AS DOUBLE)) + …``.  numpy's
+    elementwise multiply and add are separate, unfused roundings, like the
+    JVM's."""
+    import numpy as np
+
+    acc = np.zeros((x.shape[0], max(x.shape[2], y.shape[2])))
+    term = np.empty_like(acc)
+    with np.errstate(invalid="ignore", over="ignore"):  # inf and NaN as in SQL
+        for i in range(x.shape[1]):
+            acc += np.multiply(x[:, i], y[:, i], out=term)
+    return acc
+
+
+def _signature_kernel(batches, planes, dim: int):
+    """mapInArrow body of :func:`lsh_signatures`: (vec_id, embedding) batches
+    in, the same columns plus ``sig`` out."""
+    import numpy as np
+    import pyarrow as pa
+
+    shifts = np.arange(len(planes), dtype=np.int32)[:, None]
+    p = np.asarray(planes, dtype=np.float64)[:, :, None]  # (planes, dim, 1)
+    for b in batches:
+        cols, null = _arrow_columns(b.column(1), dim)
+        proj = _chain_sums(p, cols[None])  # (planes, n)
+        # SQL orders NaN above every number, so ``NaN >= 0`` is true there
+        bits = (proj >= 0) | np.isnan(proj)
+        bits[:, null] = False  # ``NULL >= 0`` is not true: the bit is 0
+        sig = (bits.astype(np.int32) << shifts).sum(axis=0, dtype=np.int32)
+        yield pa.RecordBatch.from_arrays(
+            [b.column(0), b.column(1), pa.array(sig, pa.int32())],
+            names=["vec_id", "embedding", "sig"],
+        )
+
+
+def _cosine_terms_kernel(batches, dim: int):
+    """mapInArrow body of the re-rank: (query_id, qv, neighbor_id, cv)
+    batches in, (query_id, neighbor_id, _ab, _aa, _bb) out, the three
+    dot products :func:`_cosine` builds as SQL chains."""
+    import numpy as np
+    import pyarrow as pa
+
+    for b in batches:
+        at, a_null = _arrow_columns(b.column(1), dim)
+        ct, c_null = _arrow_columns(b.column(3), dim)
+        sums = _chain_sums(np.stack([at, at, ct]), np.stack([ct, at, ct]))
+        nulls = (a_null | c_null, a_null, c_null)
+        yield pa.RecordBatch.from_arrays(
+            [b.column(0), b.column(2)]
+            + [pa.array(v, pa.float64(), mask=m) for v, m in zip(sums, nulls)],
+            names=["query_id", "neighbor_id", "_ab", "_aa", "_bb"],
+        )
+
+
+def _cosine_terms(pairs: DataFrame, dim: int) -> DataFrame:
+    """(query_id, qv, neighbor_id, cv) → (query_id, neighbor_id, _ab, _aa,
+    _bb): the three dot products of ``_cosine("qv", "cv", dim)``, by the
+    kernel, bit-identical to the SQL chains (same NULL rules as
+    :func:`lsh_signatures`)."""
+    fields = pairs.schema.fields
+    out = StructType(
+        [fields[0], fields[2]]
+        + [StructField(c, DoubleType()) for c in ("_ab", "_aa", "_bb")]
+    )
+    return pairs.mapInArrow(partial(_cosine_terms_kernel, dim=dim), out)
+
+
 def lsh_signatures(vectors: DataFrame, dim: int) -> DataFrame:
-    """vec_id → 16-bit random-hyperplane signature, as one JVM expression
-    (sum of shifted sign bits — no UDF, fully codegen).
+    """vec_id → 16-bit random-hyperplane signature, computed by a numpy
+    kernel over the Arrow batches of ``(vec_id, embedding)``
+    (``mapInArrow``), for any ``dim``.
 
-    Each ±1-plane projection is an unrolled ``acc ± embedding[i]`` Add
-    chain: bit-identical to the previous ``aggregate(zip_with(...))`` fold
-    (``acc + x*(+1.0)`` ≡ ``acc + x`` and ``acc + x*(-1.0)`` ≡ ``acc - x``
-    in IEEE 754; same left-to-right order, same ``lit(0.0)`` start), but
-    whole-stage-codegen'd instead of interpreted per element — the
-    signature pass drops from 1.55 s to ~0.1 s at sf0.1.  Dims above
-    ``_FLAT_DIM_CAP`` keep the fold (expression-tree size).
+    The value is bit-identical to the SQL it replaces, one
+    ``0.0D ± CAST(get(embedding, i) AS DOUBLE) …`` chain per plane and
+    ``CASE WHEN proj >= 0 THEN 1 << j ELSE 0 END`` per bit: the kernel
+    widens float32 to float64 (exact), multiplies by ±1.0 (exact, and
+    ``x + (-y)`` is the IEEE operation ``x - y``) and accumulates left to
+    right from ``0.0`` per plane.  SQL's NULL and NaN rules are kept: a
+    NULL array, one shorter than ``dim`` or one with a NULL among its
+    first ``dim`` elements gives a NULL projection and so a 0 bit; NaN
+    ranks above every number, so its bit is 1.  Longer arrays use their
+    first ``dim`` elements.
 
-    The whole 16-bit sum is ONE SQL string parsed in one py4j round-trip
-    (the :func:`_dot` rule).  Building it from ``Column`` operators took 16
-    parses plus ~80 py4j calls: 0.18–0.21 s per call vs 0.10–0.11 s now
-    (64 dims), for the same optimized plan and the same signatures."""
-    bits = []
-    for j, plane in enumerate(_hyperplanes(dim)):
-        if dim <= _FLAT_DIM_CAP:
-            proj = "0.0D" + "".join(
-                (" + " if h > 0 else " - ") + f"CAST(get(embedding, {i}) AS DOUBLE)"
-                for i, h in enumerate(plane)
-            )
-        else:
-            proj = _fold_dot_sql("embedding", _lit_arr_sql(plane))
-        bits.append(f"CASE WHEN ({proj}) >= 0 THEN shiftleft(1, {j}) ELSE 0 END")
-    return vectors.select("vec_id", "embedding", F.expr(" + ".join(bits)).alias("sig"))
+    The SQL form was a ~1,000-node expression per query (16 × ``dim``
+    terms) whose parse, analysis and code generation cost 0.6–0.9 s on
+    every call; the kernel's plan is one ``MapInArrow`` node."""
+    pairs = vectors.select("vec_id", "embedding")
+    # a NEW StructType: ``schema.add`` would mutate the input's cached schema
+    out = StructType(
+        [*pairs.schema.fields, StructField("sig", IntegerType(), False)]
+    )
+    return pairs.mapInArrow(
+        partial(_signature_kernel, planes=_hyperplanes(dim), dim=dim), out
+    )
 
 
 def q_sim_knn_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -287,7 +396,14 @@ def q_sim_knn_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidates.  Recall < 1 by design (asserted >= 0.6 vs brute force in
     tests); at scale this replaces the Q×N scored join with per-bucket
     joins.  Full oracle hash check: the md5-derived ±1 hyperplanes are
-    engine-neutral, so DuckDB reproduces the banding bit-for-bit."""
+    engine-neutral, so DuckDB reproduces the banding bit-for-bit.
+
+    Two Python stages, both numpy over Arrow batches: the signatures
+    (:func:`lsh_signatures`, once, under the ``localCheckpoint``) and the
+    re-rank's three dot products (:func:`_cosine_terms`).  Both give the
+    values of the SQL chains they replaced, bit for bit; joins, banding,
+    the cosine's ``sqrt`` and division, and the top-k window stay in the
+    JVM."""
     t = load_tables(spark, sf_dir)
     e = t["embeddings"]
     dim = embedding_dim(sf_dir)  # parquet footer — no .first() driver job
@@ -328,11 +444,15 @@ def q_sim_knn_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         # id-pair dedup only: full-row distinct would hash both embedding
         # arrays per candidate
         .dropDuplicates(["query_id", "neighbor_id"])
-        .withColumn("cos", _cosine("qv", "cv", dim))
+    )
+    # the dot products in the kernel; the sqrt and the (ANSI) division stay
+    # in SQL, so a zero vector fails or gives NULL exactly as before
+    scored = _cosine_terms(cand, dim).withColumn(
+        "cos", F.col("_ab") / (F.sqrt("_aa") * F.sqrt("_bb"))
     )
     w = W.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("neighbor_id"))
     return (
-        cand.withColumn("rank", F.row_number().over(w))
+        scored.withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= TOP_K)
         .select("query_id", "neighbor_id", F.round("cos", 6).alias("cos"), "rank")
     )

@@ -7,10 +7,12 @@ never takes down the whole declared surface.
 from __future__ import annotations
 
 import importlib
-import sys
+import logging
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+
+_log = logging.getLogger(__name__)
 
 #: modules that export QUERIES (name -> callable) and ORACLES (name -> sql)
 _MODULES = (
@@ -113,7 +115,7 @@ def _collect(attr: str) -> dict:
         try:
             mod = importlib.import_module(modname)
         except Exception as exc:  # keep one broken module from killing all
-            print(f"WARNING: {modname} failed to import: {exc!r}", file=sys.stderr)
+            _log.warning("%s failed to import: %r", modname, exc)
             continue
         for key, value in getattr(mod, attr, {}).items():
             if key in raw:

@@ -61,7 +61,10 @@ exactly what a strategy would see.
 from __future__ import annotations
 
 import functools
+import logging
 import os
+
+_log = logging.getLogger(__name__)
 
 #: ops the transcoder understands, keyed by Catalyst expression class.
 _CMP = {
@@ -859,12 +862,9 @@ def install_fused_write() -> None:
             except Exception as exc:
                 run = None  # analysis-stage hiccup → general sink
                 if debug:
-                    import traceback
-
-                    print(
-                        "[fusedWrite] analysis raised; general sink:\n"
-                        + "".join(traceback.format_exception(exc)),
-                        file=__import__("sys").stderr,
+                    _log.warning(
+                        "fusedWrite analysis raised; general sink",
+                        exc_info=exc,
                     )
             if run is not None:
                 # past this point failures PROPAGATE — falling back after a
@@ -872,9 +872,8 @@ def install_fused_write() -> None:
                 run(self._df.sparkSession, eff_path)
                 return None
             if debug:
-                print(
-                    f"[fusedWrite] general sink: {_LAST_DECLINE or 'declined'}",
-                    file=__import__("sys").stderr,
+                _log.warning(
+                    "fusedWrite general sink: %s", _LAST_DECLINE or "declined"
                 )
         return orig_save(
             self, path=path, format=format, mode=mode,

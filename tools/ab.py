@@ -56,6 +56,8 @@ KNOWN_METRICS = DEFAULT_METRICS + [
     # $SPARK_GRAFT_SF_DIR
     "bench_dedup_minhash",
     "bench_sim_lsh",
+    # the other user of the LSH signature kernel (not a bench.py metric)
+    "bench_dedup_embed_lsh",
 ]
 N_POINTS = int(os.environ.get("SPARK_GRAFT_PC_POINTS", "600000"))
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -113,6 +115,9 @@ def _child(metrics: list[str], runs: int) -> None:
             spark, SF_DIR
         ).collect(),
         "bench_sim_lsh": lambda: similarity.q_sim_knn_lsh(
+            spark, SF_DIR
+        ).collect(),
+        "bench_dedup_embed_lsh": lambda: dedup.q_dedup_embed_lsh(
             spark, SF_DIR
         ).collect(),
         "bench_las_transcode": lambda: transcode_las(

@@ -5,8 +5,11 @@ Usage: python tools/time_keys.py [--runs N] <key> [<key> ...]
 Each sample builds a FRESH DataFrame (matching how the bench and driver
 construct queries — plan/analysis cost included) and writes it to the
 noop sink so the computation, not the collect, is timed.  Prints one JSON
-line: {key: {"med": s, "min": s, "max": s, "runs": [..], "compiles": [..],
-"compile_s": [..]}}.  ``compiles``/``compile_s`` are the generated classes
+line: {key: {"med": s, "min": s, "max": s, "runs": [..], "build": [..],
+"action": [..], "compiles": [..], "compile_s": [..]}}.  ``build`` is the
+time to construct the DataFrame (the eager ``localCheckpoint`` jobs of an
+operator run here) and ``action`` the noop write; ``runs`` is their sum.
+``compiles``/``compile_s`` are the generated classes
 Janino compiled during each sample and their compile time: nonzero on a
 repeated sample means Spark's codegen cache is evicting the key's classes.
 """
@@ -45,12 +48,17 @@ def main() -> int:
     # one warm-up of the first key so JVM/session warm-up is not billed
     qs[keys[0]](spark, SF_DIR).write.format("noop").mode("overwrite").save()
     for key in keys:
-        samples, n_compiled, compile_s = [], [], []
+        samples, builds, actions, n_compiled, compile_s = [], [], [], [], []
         for i in range(runs):
             spark.sparkContext.setJobDescription(f"time:{key}#{i}")
             n0, ns0, t0 = compiles().getCount(), codegen.compileTime(), time.time()
-            qs[key](spark, SF_DIR).write.format("noop").mode("overwrite").save()
-            samples.append(round(time.time() - t0, 3))
+            df = qs[key](spark, SF_DIR)
+            t1 = time.time()
+            df.write.format("noop").mode("overwrite").save()
+            t2 = time.time()
+            samples.append(round(t2 - t0, 3))
+            builds.append(round(t1 - t0, 3))
+            actions.append(round(t2 - t1, 3))
             n_compiled.append(compiles().getCount() - n0)
             compile_s.append(round((codegen.compileTime() - ns0) / 1e9, 3))
         out[key] = {
@@ -58,6 +66,8 @@ def main() -> int:
             "min": min(samples),
             "max": max(samples),
             "runs": samples,
+            "build": builds,
+            "action": actions,
             "compiles": n_compiled,
             "compile_s": compile_s,
         }
