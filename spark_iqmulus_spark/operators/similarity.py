@@ -174,27 +174,18 @@ def _cosine(a, b, dim: int | None = None):
     return _dot(a, b, dim) / (F.sqrt(_dot(a, a, dim)) * F.sqrt(_dot(b, b, dim)))
 
 
-#: embeddings.parquet path → (size, mtime_ns, dim): the dimensionality,
-#: read from the first row with pyarrow (no Spark job — replaces a per-call
-#: ``.first()`` driver job), re-read whenever the file is rewritten.
-_DIM_CACHE: dict[str, tuple[int, int, int]] = {}
-
-
 def embedding_dim(sf_dir: str) -> int:
+    """The dimensionality, read from the first row of ``embeddings.parquet``
+    with pyarrow (no Spark job), on every call, so a rewritten file is
+    never answered from a stale width."""
     import os
 
-    path = os.path.join(sf_dir, "embeddings.parquet")
-    st = os.stat(path)
-    hit = _DIM_CACHE.get(path)
-    if hit is not None and hit[:2] == (st.st_size, st.st_mtime_ns):
-        return hit[2]
     import pyarrow.dataset as ds
 
+    path = os.path.join(sf_dir, "embeddings.parquet")
     dset = ds.dataset(path, format="parquet")
     batch = next(iter(dset.to_batches(columns=["embedding"], batch_size=1)))
-    dim = len(batch.column(0)[0])
-    _DIM_CACHE[path] = (st.st_size, st.st_mtime_ns, dim)
-    return dim
+    return len(batch.column(0)[0])
 
 
 def brute_force_knn(
@@ -266,17 +257,8 @@ def _arrow_columns(col, dim: int):
     Widening float32 to float64 is exact, as ``CAST(x AS DOUBLE)`` is."""
     import numpy as np
 
-    n = len(col)
     offsets = col.offsets.to_numpy()
     values = col.values
-    if (
-        col.null_count == 0
-        and values.null_count == 0
-        and (np.diff(offsets) == dim).all()
-    ):
-        flat = values.slice(offsets[0], n * dim).to_numpy(zero_copy_only=False)
-        mat, null = flat.reshape(n, dim), np.zeros(n, dtype=bool)
-        return np.ascontiguousarray(mat.T, dtype=np.float64), null
     null = np.diff(offsets) < dim
     if col.null_count:
         null |= col.is_null().to_numpy(zero_copy_only=False)
