@@ -21,7 +21,7 @@ and rounded — engine-neutral to well below the rounding precision.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
@@ -144,12 +144,17 @@ def q_text_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     # the model is bounded (≤ |charset|³ rows) — checkpoint it so the
-    # corpus-wide explode runs once, and derive the trigram total from it
-    # (sum of counts == total trigram rows) instead of a second full pass
+    # corpus-wide explode runs once.  The trigram total (sum of counts ==
+    # total trigram rows) rides the checkpoint job via DataFrame.observe,
+    # as in dedup.dedup_components, instead of a separate aggregate job.
+    obs = Observation()
     model = (
-        tri.groupBy("tri").agg(F.count(F.lit(1)).alias("c")).localCheckpoint()
+        tri.groupBy("tri")
+        .agg(F.count(F.lit(1)).alias("c"))
+        .observe(obs, F.sum("c").alias("total"))
+        .localCheckpoint()
     )
-    total = model.agg(F.sum("c")).collect()[0][0]
+    total = obs.get["total"]
     scored = tri.join(F.broadcast(model), "tri")
     return scored.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_tri"),

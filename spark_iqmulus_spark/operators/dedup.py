@@ -6,8 +6,9 @@ Four families, all expressed over the ``documents`` / ``embeddings`` tables:
 - **n-gram Jaccard** — exact shingle-set similarity via a shingle self-join
 - **MinHash + LSH**  — minhash signatures (md5, DuckDB-reproducible →
   full oracle hash check) banded into buckets; candidates verified with
-  exact Jaccard bounded by the candidate set; recall vs the exact n-gram
-  pairs additionally asserted in tests/test_operators.py
+  exact Jaccard by intersecting the two documents' gram arrays, only
+  candidate documents tokenized; recall vs the exact n-gram pairs
+  additionally asserted in tests/test_operators.py
 - **SimHash**   — 64-bit simhash (md5-nibble bit construction, DuckDB-
   reproducible → full oracle hash check) + banded hamming-distance
   candidate pairs
@@ -21,7 +22,8 @@ Scale design (the point of this module at 100 TB):
   (hot-key guard: one viral shingle would otherwise create a quadratic
   bucket — the standard trick in web-scale dedup);
 - MinHash/SimHash banding turns O(N²) comparison into per-bucket joins of
-  expected O(1) size; exact verification runs only on candidates;
+  expected O(1) size; exact verification runs only on candidates, one
+  ``array_intersect`` per pair;
 - all hashing is JVM-side (``md5``/``sha2``/``xxhash64`` are codegen'd
   built-ins) — no Python in the hot path.
 """
@@ -67,14 +69,46 @@ EMBED_LSH_BROADCAST_CAP = 500_000
 _NORM = "lower(trim(regexp_replace(text, '\\s+', ' ', 'g')))"
 
 
-def _shingles(df: DataFrame, n: int = 3, distinct: bool = True) -> DataFrame:
-    """Distinct word n-gram shingles per document (JVM-side array ops).
+def _words(df: DataFrame) -> DataFrame:
+    """``(doc_id, words)``: the normalized text split on spaces.
 
     The split is materialized in its own projection before the gram
-    lambda: expressions referenced inside ``transform``'s lambda are
-    re-evaluated per element (no subexpression elimination across the
-    lambda boundary), so inlining ``words`` re-split the text 3× per
-    shingle — measured 12.7× slower at sf0.1 (10.8 s → 0.85 s).
+    lambda (:func:`_grams`): expressions referenced inside ``transform``'s
+    lambda are re-evaluated per element (no subexpression elimination
+    across the lambda boundary), so inlining ``words`` re-split the text
+    3× per shingle — measured 12.7× slower at sf0.1 (10.8 s → 0.85 s)."""
+    words = F.split(F.lower(F.trim(F.regexp_replace("text", r"\s+", " "))), " ")
+    return df.select("doc_id", words.alias("words"))
+
+
+def _grams(n: int, distinct: bool):
+    """The word n-gram array over :func:`_words`' ``words`` column, empty
+    for fewer than ``n`` words, deduplicated with ``array_distinct``
+    unless ``distinct`` is False."""
+    words = F.col("words")
+    # indices 0..size-n inclusive → size-n+1 shingles; element_at is 1-based
+    grams = F.transform(
+        F.sequence(F.lit(0), F.size(words) - n),
+        lambda i: F.concat_ws(" ", *[F.element_at(words, i + k + 1) for k in range(n)]),
+    )
+    grams = F.when(F.size(words) >= n, grams).otherwise(F.array().cast("array<string>"))
+    return F.array_distinct(grams) if distinct else grams
+
+
+def _gram_sets(df: DataFrame) -> DataFrame:
+    """``(doc_id, g)``: each document's distinct word 3-grams as one array.
+
+    Filter or explode ``g`` only after a checkpoint: the optimizer pushes
+    a predicate on ``g`` (or the ``size(g) > 0`` it infers for
+    ``explode(g)``) below both projections, with ``words`` inlined into
+    the lambda again.  That is why :func:`_shingles` explodes the gram
+    expression itself, for which no filter is inferred."""
+    return _words(df).select("doc_id", _grams(3, True).alias("g"))
+
+
+def _shingles(df: DataFrame, n: int = 3, distinct: bool = True) -> DataFrame:
+    """Word n-gram shingles per document, one ``(doc_id, shingle)`` row
+    each: the :func:`_grams` array exploded.
 
     The ``(doc_id, text)`` projection is respread round-robin when the
     scan has fewer partitions than cores (``multimodal._spread`` —
@@ -90,9 +124,9 @@ def _shingles(df: DataFrame, n: int = 3, distinct: bool = True) -> DataFrame:
     broadcast pair join preserves the spread partitioning, and at scale
     the join's own Exchange provides the keyed partitioning anyway).
 
-    ``distinct=False`` skips the per-row dedup for consumers whose
-    downstream aggregate is insensitive to duplicate (doc_id, shingle)
-    rows (min() in the minhash signatures).
+    ``distinct=False`` keeps repeated (doc_id, shingle) rows; no operator
+    passes it any more (the minhash signatures read ``_grams(3, False)``
+    directly), only the test references of the shingle-stream pipelines.
 
     ``distinct=True`` dedups with ``array_distinct`` on the gram array
     BEFORE the explode — zero Exchange — instead of ``.distinct()`` on
@@ -104,18 +138,8 @@ def _shingles(df: DataFrame, n: int = 3, distinct: bool = True) -> DataFrame:
     the removed full-stream shuffle)."""
     from .multimodal import _spread
 
-    words_expr = F.split(F.lower(F.trim(F.regexp_replace("text", r"\s+", " "))), " ")
-    w = _spread(df.select("doc_id", "text")).select("doc_id", words_expr.alias("words"))
-    words = F.col("words")
-    # indices 0..size-n inclusive → size-n+1 shingles; element_at is 1-based
-    grams = F.transform(
-        F.sequence(F.lit(0), F.size(words) - n),
-        lambda i: F.concat_ws(" ", *[F.element_at(words, i + k + 1) for k in range(n)]),
-    )
-    grams = F.when(F.size(words) >= n, grams).otherwise(F.array().cast("array<string>"))
-    if distinct:
-        grams = F.array_distinct(grams)
-    return w.select("doc_id", F.explode(grams).alias("shingle"))
+    w = _words(_spread(df.select("doc_id", "text")))
+    return w.select("doc_id", F.explode(_grams(n, distinct)).alias("shingle"))
 
 
 def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -318,24 +342,30 @@ BANDS = 4
 
 def minhash_signatures(docs: DataFrame) -> DataFrame:
     """doc_id → 16 minhash values, computed as min(md5(seed || ':' ||
-    shingle)) per seed.  Single groupBy over exploded shingles; all JVM
-    built-ins.  md5 (not xxhash64) on purpose: it is bit-identical in
-    DuckDB, which makes the whole MinHash-LSH pipeline oracle-checkable;
-    it costs ~2× xxhash64 per shingle, but hashing is a vanishing fraction
-    of the pipeline (the explode and the two shuffles dominate).
+    shingle)) per seed over the document's gram array — one
+    ``array_min(transform(g, …))`` per seed on the document's own row, so
+    no shingle explode and no groupBy shuffle.  A document with no 3-gram
+    gets NULL values.  All JVM built-ins.  md5 (not xxhash64) on purpose:
+    it is bit-identical in DuckDB, which makes the whole MinHash-LSH
+    pipeline oracle-checkable.
 
-    Shingles arrive NON-distinct: min() is insensitive to duplicate
-    (doc_id, shingle) rows, so even the per-row ``array_distinct`` dedup
-    is pure cost (measured: no win at sf0.1 — intra-doc duplicate 3-grams
-    are ~0.1% of the stream, so 16×md5 over the duplicates is noise; the
-    groupBy's partial aggregation reduces map-side to one 16-hash row per
-    doc either way)."""
-    sh = _shingles(docs, distinct=False)
-    aggs = [
-        F.min(F.md5(F.concat(F.lit(f"{j}:"), F.col("shingle")))).alias(f"mh{j}")
-        for j in range(MINHASH_K)
-    ]
-    return sh.groupBy("doc_id").agg(*aggs)
+    The grams are NOT deduplicated: a minimum is insensitive to repeated
+    elements, so ``array_distinct`` would be pure cost.  The gram array
+    stays in its own projection, which the 16 lambdas read: inlined, it
+    would be rebuilt once per seed."""
+    from .multimodal import _spread
+
+    w = _words(_spread(docs.select("doc_id", "text")))
+    g = w.select("doc_id", _grams(3, False).alias("g"))
+    return g.select("doc_id", *[_min_md5(j).alias(f"mh{j}") for j in range(MINHASH_K)])
+
+
+def _min_md5(seed: int):
+    """min over the gram array ``g`` of md5(seed || ':' || gram).  The
+    prefix is bound here, not in a lambda default: PySpark reads the
+    lambda's arity, and a second parameter becomes the element index."""
+    prefix = F.lit(f"{seed}:")
+    return F.array_min(F.transform("g", lambda s: F.md5(F.concat(prefix, s))))
 
 
 def lsh_candidate_pairs(sigs: DataFrame) -> DataFrame:
@@ -360,6 +390,10 @@ def lsh_candidate_pairs(sigs: DataFrame) -> DataFrame:
             for b in range(BANDS)
         ]
     )
+    # a document with no 3-gram (NULL signature) gets no band row; the
+    # guard sits inside the explode because a filter on the signature
+    # would be pushed down and re-evaluate the gram lambdas
+    bands = F.when(F.col("mh0").isNotNull(), bands)
     exploded = sigs.select("doc_id", F.explode(bands).alias("bb")).select(
         "doc_id", "bb.band", "bb.bucket"
     )
@@ -380,21 +414,69 @@ def lsh_candidate_pairs(sigs: DataFrame) -> DataFrame:
     )
 
 
-def candidate_bounded_shingles(sh: DataFrame, cand: DataFrame) -> DataFrame:
-    """Semi-join the shingle set down to documents appearing in some LSH
-    candidate pair — the LeftSemi bound that keeps minhash verification
-    linear in candidates (never the all-pairs shingle self-join).
+def candidate_gram_sets(docs: DataFrame, cand: DataFrame) -> DataFrame:
+    """``(doc_id, g)`` gram sets (:func:`_gram_sets`) of the documents that
+    appear in some LSH candidate pair — the LeftSemi bound that keeps
+    minhash verification linear in candidates (never the all-pairs
+    shingle self-join).  The documents are semi-joined BEFORE tokenizing:
+    shingling is per-document, so this re-tokenizes only the candidate
+    docs (at 100 TB a small fraction of the corpus).
 
     Returned UN-checkpointed so the LeftSemi stays visible in the physical
     plan for ``tests/test_plans.py::test_minhash_verify_is_candidate_bounded``;
-    ``q_dedup_minhash`` eagerly checkpoints the result (the bound then
-    executes inside the checkpoint job)."""
-    cand_ids = (
-        cand.select(F.col("doc_a").alias("doc_id"))
-        .union(cand.select(F.col("doc_b").alias("doc_id")))
-        .distinct()
+    the callers eagerly checkpoint the result (the bound then executes
+    inside the checkpoint job).  No ``multimodal._spread`` here: its
+    partition probe plans the semi-join, which under AQE runs the
+    candidate shuffles as three extra jobs at build time.  Spreading the
+    ``documents`` projection before the semi-join instead (no probe job)
+    was measured and not kept: one more job at sf0.01, and at sf1
+    (2-split documents scan, 248,811 candidate pairs) ``q_dedup_minhash``
+    read 12.4 s against 13.3 s without it over 3 alternating sessions,
+    won 2 of 3, within the session spread."""
+    # no distinct: a LeftSemi emits each document once however often its
+    # id repeats, and the distinct would cost a shuffle and a job
+    cand_ids = cand.select(F.col("doc_a").alias("doc_id")).union(
+        cand.select(F.col("doc_b").alias("doc_id"))
     )
-    return sh.join(cand_ids, "doc_id", "left_semi")
+    return _gram_sets(docs.join(cand_ids, "doc_id", "left_semi"))
+
+
+def jaccard_verify(
+    cand: DataFrame, grams: DataFrame, threshold: float | None = None
+) -> DataFrame:
+    """Exact Jaccard of each ``(doc_a, doc_b)`` candidate pair from the two
+    documents' gram sets: ``|A∩B| / (|A| + |B| - |A∩B|)`` with
+    ``array_intersect`` on the two arrays — one row per pair, no shingle
+    explode, no intersection aggregate.  Cost Σ_pairs (|A| + |B|), linear
+    in candidates.
+
+    With ``threshold`` the pairs whose size-ratio bound
+    ``min(|A|,|B|) / max(|A|,|B|)`` is already below it are dropped
+    before the intersection (:func:`minhash_pairs_thresholded`), and so
+    are the pairs whose Jaccard is."""
+    # a document with no 3-gram has no minhash signature, so no candidate
+    # pair names one; dropping it anyway keeps the denominator nonzero for
+    # any ``cand``
+    grams = grams.where(F.size("g") > 0)
+    ga = grams.select(F.col("doc_id").alias("doc_a"), F.col("g").alias("ga"))
+    gb = grams.select(F.col("doc_id").alias("doc_b"), F.col("g").alias("gb"))
+    pairs = cand.select("doc_a", "doc_b").join(ga, "doc_a").join(gb, "doc_b")
+    na, nb = F.size("ga"), F.size("gb")
+    if threshold is not None:
+        bound = F.round(F.least(na, nb) / F.greatest(na, nb), 6)
+        pairs = pairs.where(bound >= F.lit(float(threshold)))
+    sizes = pairs.select(
+        "doc_a",
+        "doc_b",
+        F.size(F.array_intersect("ga", "gb")).alias("inter"),
+        na.alias("na"),
+        nb.alias("nb"),
+    )
+    inter, union = F.col("inter"), F.col("na") + F.col("nb") - F.col("inter")
+    out = sizes.select("doc_a", "doc_b", F.round(inter / union, 6).alias("jaccard"))
+    if threshold is not None:
+        out = out.where(F.col("jaccard") >= F.lit(float(threshold)))
+    return out
 
 
 def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -406,63 +488,15 @@ def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load_tables(spark, sf_dir)
     docs = t["documents"]
     # localCheckpoint the (tiny) candidate-pair set: it feeds the doc-id
-    # bound, the intersection join AND the final assembly — three
-    # consumers, each of which would otherwise re-run the band self-join +
-    # distinct from the checkpointed banded frame
+    # bound and the verify join, each of which would otherwise re-run the
+    # band self-join + distinct from the checkpointed banded frame
     cand = lsh_candidate_pairs(minhash_signatures(docs)).localCheckpoint()
-
-    # verification is CANDIDATE-BOUNDED — the whole point of LSH banding.
-    # 1. semi-join the DOCUMENTS down to those appearing in some candidate
-    #    pair, and only then tokenize: shingling is per-document, so
-    #    bounding below the explode is set-identical to semi-joining the
-    #    exploded shingle stream (candidate_bounded_shingles) while
-    #    re-tokenizing only the candidate docs — at 100 TB a small
-    #    fraction of the corpus instead of a full second tokenize pass
-    #    (measured: the full-corpus re-tokenize + semi-join leg cost
-    #    ~0.6 s of the 4.5 s sf0.1 query);
-    # 2. compute intersections by routing each candidate pair through its
-    #    two shingle sets (join on doc_a, then equi-join on (doc_b, shingle))
-    #    — cost Σ_pairs |shingles(a)|, linear in candidates, never the
-    #    all-pairs shingle self-join (which would be quadratic and make the
-    #    banding decorative).
-    # localCheckpoint the candidate-bounded shingle set: it feeds the sizes
-    # aggregate AND both sides of the intersection join — three consumers,
-    # and recomputing it means re-tokenizing the candidate documents each
-    # time (same no-ReusedExchange trap as lsh_candidate_pairs)
-    cand_ids = (
-        cand.select(F.col("doc_a").alias("doc_id"))
-        .union(cand.select(F.col("doc_b").alias("doc_id")))
-        .distinct()
-    )
-    sh_c = _shingles(docs.join(cand_ids, "doc_id", "left_semi")).localCheckpoint()
-    sizes = sh_c.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-    a = sh_c.select(F.col("doc_id").alias("doc_a"), "shingle")
-    b = sh_c.select(F.col("doc_id").alias("doc_b"), "shingle")
-    inter = (
-        cand.join(a, "doc_a")
-        .join(b, ["doc_b", "shingle"])
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    # sizes grows with the candidate set — plain equi-joins; AQE broadcasts
-    # while it is small and shuffles when it is not.
-    return (
-        cand.join(inter, ["doc_a", "doc_b"], "left")
-        .na.fill({"inter": 0})
-        .join(
-            sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("na")),
-            "doc_a",
-        )
-        .join(
-            sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("nb")),
-            "doc_b",
-        )
-        .withColumn(
-            "jaccard",
-            F.round(F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter")), 6),
-        )
-        .select("doc_a", "doc_b", "jaccard")
-    )
+    # verification is CANDIDATE-BOUNDED — the whole point of LSH banding:
+    # one gram-set row per candidate document, checkpointed because both
+    # sides of the verify join read it (same no-ReusedExchange trap as
+    # lsh_candidate_pairs), then one array_intersect per candidate pair
+    grams = candidate_gram_sets(docs, cand).localCheckpoint()
+    return jaccard_verify(cand, grams)
 
 
 def minhash_pairs_thresholded(
@@ -470,72 +504,25 @@ def minhash_pairs_thresholded(
 ) -> DataFrame:
     """``q_dedup_minhash`` for THRESHOLDED consumers (round 13 — VERDICT
     r12 next #7): same LSH banding and exact verification, plus an EXACT
-    size-ratio prebound between candidate generation and the expensive
-    intersection join::
+    size-ratio prebound ahead of the intersection::
 
         J(A,B) = |A∩B| / |A∪B|  ≤  min(|A|,|B|) / max(|A|,|B|)
 
     A candidate pair whose (rounded) size-ratio bound is already below
-    ``threshold`` cannot survive the final filter, so it skips the
-    shingle-routing join entirely — verification cost becomes linear in
-    SURVIVING pairs.  Rounding keeps the prune sound: rounding is
-    monotone, so ``round(J,6) ≤ round(bound,6) < threshold`` — the output
-    is PROVABLY identical to
+    ``threshold`` cannot survive the final filter, so its
+    ``array_intersect`` is never computed.  Rounding keeps the prune
+    sound: rounding is monotone, so ``round(J,6) ≤ round(bound,6) <
+    threshold`` — the output is PROVABLY identical to
     ``q_dedup_minhash(...).where(jaccard >= threshold)`` (pinned by
     tests/test_operators.py::test_minhash_thresholded_equals_filtered).
 
     ``q_dedup_minhash`` itself is unchanged: its declared output carries
     the exact Jaccard of EVERY candidate pair (no threshold), which is
     why the early-exit cannot be applied there without an oracle change
-    (SCALE.md §dedup-verify-prebound has the sf5 A/B numbers)."""
+    (SCALE.md §dedup-verify-prebound)."""
     cand = lsh_candidate_pairs(minhash_signatures(docs)).localCheckpoint()
-    # sizes need every candidate document's shingle count — the same
-    # candidate-doc bound as the full verify, applied BELOW the shingle
-    # explode (tokenize only candidate docs; see q_dedup_minhash)
-    cand_ids = (
-        cand.select(F.col("doc_a").alias("doc_id"))
-        .union(cand.select(F.col("doc_b").alias("doc_id")))
-        .distinct()
-    )
-    sh_c = _shingles(docs.join(cand_ids, "doc_id", "left_semi")).localCheckpoint()
-    sizes = sh_c.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-    cand_sz = cand.join(
-        sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("na")),
-        "doc_a",
-    ).join(
-        sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("nb")),
-        "doc_b",
-    )
-    # survivors feed the id-bound semi-join AND the final assembly —
-    # checkpoint so the prune executes once
-    survivors = cand_sz.where(
-        F.round(
-            F.least("na", "nb") / F.greatest("na", "nb"), 6
-        ) >= F.lit(float(threshold))
-    ).localCheckpoint()
-    sh_s = candidate_bounded_shingles(sh_c, survivors)
-    a = sh_s.select(F.col("doc_id").alias("doc_a"), "shingle")
-    b = sh_s.select(F.col("doc_id").alias("doc_b"), "shingle")
-    inter = (
-        survivors.select("doc_a", "doc_b")
-        .join(a, "doc_a")
-        .join(b, ["doc_b", "shingle"])
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    return (
-        survivors.join(inter, ["doc_a", "doc_b"], "left")
-        .na.fill({"inter": 0})
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter")),
-                6,
-            ),
-        )
-        .where(F.col("jaccard") >= F.lit(float(threshold)))
-        .select("doc_a", "doc_b", "jaccard")
-    )
+    grams = candidate_gram_sets(docs, cand).localCheckpoint()
+    return jaccard_verify(cand, grams, threshold)
 
 
 def _simhash_mask(k: int) -> int:

@@ -306,12 +306,12 @@ def test_transitions_single_window_no_cartesian(spark, tables):
 
 def test_minhash_verify_is_candidate_bounded(spark, tables):
     """The minhash exact-verify stage must be bounded by the LSH candidate
-    set: shingles are semi-joined down to candidate doc_ids before any
-    intersection join (a plan without the LeftSemi would be the all-pairs
-    shingle self-join — quadratic, making the banding decorative)."""
+    set: documents are semi-joined down to candidate doc_ids before their
+    gram sets are built and intersected (a plan without the LeftSemi would
+    be the all-pairs self-join — quadratic, making the banding
+    decorative)."""
     from spark_iqmulus_spark.operators.dedup import (
-        _shingles,
-        candidate_bounded_shingles,
+        candidate_gram_sets,
         lsh_candidate_pairs,
         minhash_signatures,
         q_dedup_minhash,
@@ -322,8 +322,8 @@ def test_minhash_verify_is_candidate_bounded(spark, tables):
     # query eagerly checkpoints it, which hides the LeftSemi from the final
     # plan text but still executes it inside the checkpoint job)
     docs = load_tables(spark, SF_DIR)["documents"]
-    bounded = candidate_bounded_shingles(
-        _shingles(docs), lsh_candidate_pairs(minhash_signatures(docs))
+    bounded = candidate_gram_sets(
+        docs, lsh_candidate_pairs(minhash_signatures(docs))
     )
     assert "LeftSemi" in plan_text(bounded)
     # no cartesian product anywhere in the verify pipeline

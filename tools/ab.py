@@ -35,6 +35,7 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import shutil
 import statistics
 import subprocess
 import sys
@@ -59,17 +60,24 @@ KNOWN_METRICS = DEFAULT_METRICS + [
     # the other user of the LSH signature kernel (not a bench.py metric)
     "bench_dedup_embed_lsh",
 ]
+#: the metrics that read the generated point-cloud fixtures
+PC_METRICS = {
+    "bench_las_transcode",
+    "bench_ply_transcode",
+    "bench_write_roundtrip",
+    "bench_las_regrid",
+    "bench_las_regrid_general",
+}
 N_POINTS = int(os.environ.get("SPARK_GRAFT_PC_POINTS", "600000"))
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
 def _child(metrics: list[str], runs: int) -> None:
-    """One fresh session: build the bench fixtures, 1 warm-up each, then
-    ``runs`` INTERLEAVED samples per metric.  Prints one JSON line."""
+    """One fresh session: :func:`_samples`, then print one JSON line.  The
+    fixture directory is removed however the session ends."""
     sys.path.insert(0, REPO)
     from spark_iqmulus_spark.session import get_spark
     from spark_iqmulus_spark.sources import register_sources
-    from tests.fixtures import make_las, make_ply_xyz
 
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     spark = get_spark("ab", cpus=cpus)
@@ -77,10 +85,24 @@ def _child(metrics: list[str], runs: int) -> None:
     register_sources(spark)
 
     pc_dir = tempfile.mkdtemp(prefix="ab_pc_")
+    try:
+        samples = _samples(spark, pc_dir, metrics, runs)
+    finally:
+        shutil.rmtree(pc_dir, ignore_errors=True)
+    print(json.dumps({"samples": samples}))
+    spark.stop()
+
+
+def _samples(spark, pc_dir: str, metrics: list[str], runs: int) -> dict:
+    """Build the point-cloud fixtures in ``pc_dir`` if a metric reads them,
+    1 warm-up each, then ``runs`` INTERLEAVED samples per metric."""
+    from tests.fixtures import make_las, make_ply_xyz
+
     las_path = os.path.join(pc_dir, "bench.las")
     ply_path = os.path.join(pc_dir, "bench.ply")
-    make_las(las_path, n=N_POINTS, fmt=1)
-    make_ply_xyz(ply_path, n=N_POINTS)
+    if PC_METRICS.intersection(metrics):
+        make_las(las_path, n=N_POINTS, fmt=1)
+        make_ply_xyz(ply_path, n=N_POINTS)
 
     from spark_iqmulus_spark.sources.transcode import (
         transcode_las,
@@ -139,8 +161,7 @@ def _child(metrics: list[str], runs: int) -> None:
             t0 = time.perf_counter()
             fn()
             samples[m].append(round(time.perf_counter() - t0, 4))
-    print(json.dumps({"samples": samples}))
-    spark.stop()
+    return samples
 
 
 def main() -> int:

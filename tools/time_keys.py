@@ -6,9 +6,12 @@ Each sample builds a FRESH DataFrame (matching how the bench and driver
 construct queries — plan/analysis cost included) and writes it to the
 noop sink so the computation, not the collect, is timed.  Prints one JSON
 line: {key: {"med": s, "min": s, "max": s, "runs": [..], "build": [..],
-"action": [..], "compiles": [..], "compile_s": [..]}}.  ``build`` is the
-time to construct the DataFrame (the eager ``localCheckpoint`` jobs of an
-operator run here) and ``action`` the noop write; ``runs`` is their sum.
+"action": [..], "build_jobs": [..], "action_jobs": [..], "compiles": [..],
+"compile_s": [..]}}.  ``build`` is the time to construct the DataFrame
+(the eager ``localCheckpoint`` jobs of an operator run here) and
+``action`` the noop write; ``runs`` is their sum.  ``build_jobs`` and
+``action_jobs`` count the Spark jobs each phase launched (one job group
+per phase, read back from ``statusTracker``).
 ``compiles``/``compile_s`` are the generated classes
 Janino compiled during each sample and their compile time: nonzero on a
 repeated sample means Spark's codegen cache is evicting the key's classes.
@@ -47,18 +50,24 @@ def main() -> int:
     out = {}
     # one warm-up of the first key so JVM/session warm-up is not billed
     qs[keys[0]](spark, SF_DIR).write.format("noop").mode("overwrite").save()
+    sc = spark.sparkContext
     for key in keys:
         samples, builds, actions, n_compiled, compile_s = [], [], [], [], []
+        build_jobs, action_jobs = [], []
         for i in range(runs):
-            spark.sparkContext.setJobDescription(f"time:{key}#{i}")
+            group = f"time:{key}#{i}"
             n0, ns0, t0 = compiles().getCount(), codegen.compileTime(), time.time()
+            sc.setJobGroup(f"{group}:build", f"{group}:build")
             df = qs[key](spark, SF_DIR)
             t1 = time.time()
+            sc.setJobGroup(f"{group}:action", f"{group}:action")
             df.write.format("noop").mode("overwrite").save()
             t2 = time.time()
             samples.append(round(t2 - t0, 3))
             builds.append(round(t1 - t0, 3))
             actions.append(round(t2 - t1, 3))
+            build_jobs.append(len(sc.statusTracker().getJobIdsForGroup(f"{group}:build")))
+            action_jobs.append(len(sc.statusTracker().getJobIdsForGroup(f"{group}:action")))
             n_compiled.append(compiles().getCount() - n0)
             compile_s.append(round((codegen.compileTime() - ns0) / 1e9, 3))
         out[key] = {
@@ -68,6 +77,8 @@ def main() -> int:
             "runs": samples,
             "build": builds,
             "action": actions,
+            "build_jobs": build_jobs,
+            "action_jobs": action_jobs,
             "compiles": n_compiled,
             "compile_s": compile_s,
         }
